@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-regression bench: run the FULL suite at sf0.1 and at the
   * uniform ×10 corpus ([[Sf1Data]]'s sf1-equivalent), and flag every
   * query whose wall-clock grew super-linearly — the per-round artifact
@@ -161,14 +159,9 @@ object BenchScale {
       println(s"[bench-scale] $sf1Dir missing — building via Sf1Data")
       Sf1Data.main(Array("/root/testdata/sf0.1", sf1Dir))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftConf.builder(s"local[$cpus]", cpus)
       .appName("graft-bench-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -12,7 +12,8 @@ object ProfileMany {
     val dir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2)
-    val spark = GraftConf.builder().getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftConf.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

@@ -39,8 +39,7 @@ object SparkEntry {
     *
     * Overridable: a session that has explicitly set a key (at build
     * time) keeps its value — we only fill in unset keys relative to
-    * Spark's built-in defaults; `GRAFT_CACHED_PLAN_AQE=false` is the
-    * measurement hook used for the A/B above. */
+    * Spark's built-in defaults. */
   def applySessionDefaults(spark: SparkSession): Unit = {
     // Coalescing floor: parallelismFirst=false alone lets AQE coalesce
     // any sub-advisory exchange to ONE partition, which serializes the
@@ -57,10 +56,8 @@ object SparkEntry {
     val floor = math.max(1, spark.sparkContext.defaultParallelism / 8)
     val defaults = Seq(
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-      "spark.sql.adaptive.coalescePartitions.minPartitionNum" ->
-        sys.env.getOrElse("GRAFT_COALESCE_FLOOR", floor.toString),
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
-        sys.env.getOrElse("GRAFT_CACHED_PLAN_AQE", "true"))
+      "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> floor.toString,
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
     defaults.foreach { case (k, v) =>
       if (!spark.sparkContext.getConf.contains(k)) spark.conf.set(k, v)
     }

@@ -59,7 +59,7 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
 
-  /** Hash-repartition `df` to the session parallelism when its input is
+  /** Repartition `df` to the session parallelism when its input is
     * too small to scan in parallel — the input-parallelism fix for
     * expensive per-row kernels over a scan of few (or unsplittable)
     * files: a 1 MB single-row-group documents file plans as ONE scan
@@ -71,16 +71,26 @@ object Tables {
     * toward spreading (a huge single-row-group file still estimates
     * many splits), which only matters below `p/2 × maxPartitionBytes`
     * of input — at scale a real corpus scan passes the gate untouched
-    * and no shuffle is added. Hash (not round-robin) on the given key:
-    * deterministic under retries and no sort-before-repartition pass. */
-  def spread(df: DataFrame, key: String): DataFrame = {
+    * and no shuffle is added.
+    *
+    * With `keys`, hash on all of them: deterministic under retries and
+    * no sort-before-repartition pass; several keys serve probe frames
+    * whose single columns are each too low-cardinality or clustered to
+    * hash alone (i54/i55's station coordinates concentrate on a rounded
+    * grid), while the tuple spreads. With no keys, round-robin — for
+    * frames whose columns are all low-cardinality (a hash spread would
+    * collapse onto a few partitions); round-robin locally sorts its
+    * input first (sortBeforeRepartition, on by default) so retries
+    * replay the same placement. */
+  def spread(df: DataFrame, keys: String*): DataFrame = {
     if (df.isStreaming) return df // no stats on streaming plans
     val sess = df.sparkSession
     val p = sess.sparkContext.defaultParallelism
     val maxSplit = sess.sessionState.conf.filesMaxPartitionBytes
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bytes >= BigInt(maxSplit) * math.max(1, p / 2)) df
-    else df.repartition(p, org.apache.spark.sql.functions.col(key))
+    else if (keys.isEmpty) df.repartition(p)
+    else df.repartition(p, keys.map(org.apache.spark.sql.functions.col): _*)
   }
 
   /** Hold AQE partition coalescing off while `f` runs its jobs — for
@@ -109,36 +119,5 @@ object Tables {
     val old = spark.conf.get(k)
     spark.conf.set(k, width.toString)
     try withCoalesceOff(spark)(f) finally spark.conf.set(k, old)
-  }
-
-  /** [[spread]] on a composite key — one stat gate, hash on all given
-    * columns (the capBuckets form, shared): for probe frames whose
-    * single columns are each too low-cardinality or clustered to hash
-    * alone (i54/i55's station coordinates concentrate on a rounded
-    * grid), while the tuple spreads. Same gate, same no-op at scale. */
-  def spreadKeys(df: DataFrame, keys: Seq[String]): DataFrame = {
-    if (df.isStreaming) return df
-    val sess = df.sparkSession
-    val p = sess.sparkContext.defaultParallelism
-    val maxSplit = sess.sessionState.conf.filesMaxPartitionBytes
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes >= BigInt(maxSplit) * math.max(1, p / 2)) df
-    else df.repartition(p, keys.map(org.apache.spark.sql.functions.col): _*)
-  }
-
-  /** [[spread]] without a key (round-robin) — for frames whose columns
-    * are all low-cardinality (a hash spread would collapse onto a few
-    * partitions). Round-robin repartition locally sorts its input
-    * first (sortBeforeRepartition, on by default) so retries replay
-    * the same placement; downstream consumers here are aggregations,
-    * indifferent to placement entirely. */
-  def spreadRR(df: DataFrame): DataFrame = {
-    if (df.isStreaming) return df
-    val sess = df.sparkSession
-    val p = sess.sparkContext.defaultParallelism
-    val maxSplit = sess.sessionState.conf.filesMaxPartitionBytes
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes >= BigInt(maxSplit) * math.max(1, p / 2)) df
-    else df.repartition(p)
   }
 }

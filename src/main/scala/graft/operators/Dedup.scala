@@ -37,20 +37,10 @@ object Dedup {
     * d16's shape identical). The stat-gated repartition pins
     * session-width hashpartitioning on the SAME keys, which window,
     * join and agg all reuse with no extra exchange; at real corpus
-    * widths the gate passes the input through untouched (the
-    * Tables.spread gate, multi-key form). */
+    * widths the gate passes the input through untouched
+    * ([[graft.Tables.spread]]). */
   private[graft] def capBuckets(df: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
-    val sess = df.sparkSession
-    val p = sess.sparkContext.defaultParallelism
-    val maxSplit = sess.sessionState.conf.filesMaxPartitionBytes
-    val spreadDf =
-      if (df.isStreaming) df
-      else {
-        val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        if (bytes >= BigInt(maxSplit) * math.max(1, p / 2)) df
-        else df.repartition(p, keys.map(col): _*)
-      }
-    spreadDf
+    graft.Tables.spread(df, keys: _*)
       .withColumn("__bsz", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
       .filter(col("__bsz") <= cap)
       .drop("__bsz")
@@ -588,7 +578,7 @@ object Dedup {
     * written as a parquet fixture both engines consume, so the whole
     * candidate/confirm pipeline stays hash-checked while the signature
     * values themselves are Spark-defined. Replaces the fully-portable
-    * md5 path after ProfileD06 at ×10 blamed it conclusively:
+    * md5 path after profiling at ×10 blamed it conclusively:
     * bands+cand 21.2 s of the 29 s total was Md5SeededExpr computing
     * 16 string md5s per shingle occurrence; the component loop the r11
     * verdict suspected was 3.8 s. (d02b keeps the md5 shape oracled

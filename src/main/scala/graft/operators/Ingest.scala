@@ -845,7 +845,7 @@ object Ingest {
     // spread: the per-row JSON parse in the partial-agg stage ran
     // serial on the single-split scan (no key column is high-cardinality
     // here — round-robin)
-    Tables.spreadRR(Tables(spark, dir).events.select(col("props"), col("value")))
+    Tables.spread(Tables(spark, dir).events.select(col("props"), col("value")))
       .groupBy(get_json_object(col("props"), "$.k").cast("int").as("k"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_v"))
       .orderBy(col("k"))

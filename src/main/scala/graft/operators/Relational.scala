@@ -327,7 +327,7 @@ object Relational {
     * probe keys, not the raw fact rows. A direct left-semi SMJ
     * shuffles and sorts every lineitem row; distinct-first lets the
     * map-side partial aggregate collapse the probe side to ≤|part|
-    * keys BEFORE any exchange (ProfileQ12 at ×10: 3.2–4.2 s as-is →
+    * keys BEFORE any exchange (at ×10: 3.2–4.2 s as-is →
     * 1.3–1.7 s rewritten), and AQE turns the residual join into a
     * broadcast when the key set is small. */
   val q12 = QueryDef(
@@ -1178,12 +1178,12 @@ object Relational {
     * fixed decimal grid stays meaningful at any node count, where raw
     * 1/nn probabilities would sink below the grid on a billion-node
     * graph. Iteration is DELTA-GATED under Components' round-cap
-    * discipline: rounds run in blocks of `graft.q36.blockRounds`
-    * (default 4) up to `graft.q36.roundCap` (default 48), stopping
-    * when the block's L1 rank movement — measured in EXACT integer
-    * micro-units on the 6-dec grid, so the adopted round count is a
-    * deterministic function of the data — averages (floor-divided)
-    * below `graft.q36.tolMicrosPerNode` micros per node PER ROUND
+    * discipline: rounds run in blocks of 4 up to `graft.q36.roundCap`
+    * (default 48), stopping when the block's L1 rank movement —
+    * measured in EXACT integer micro-units on the 6-dec grid, so the
+    * adopted round count is a deterministic function of the data —
+    * averages (floor-divided) below `graft.q36.tolMicrosPerNode`
+    * micros per node PER ROUND
     * (default 1000, i.e. movement under 0.1% of the mean rank;
     * per-round normalization keeps the gate block-size-independent).
     *
@@ -1264,7 +1264,7 @@ object Relational {
     "q36_pagerank")(d =>
     q36OracleSql(q36RoundsFor(d))) { (spark, dir) =>
     val cap = math.max(1, spark.conf.get("graft.q36.roundCap", "48").toInt)
-    val blockRounds = math.max(1, spark.conf.get("graft.q36.blockRounds", "4").toInt)
+    val blockRounds = 4
     val tolPerNode = spark.conf.get("graft.q36.tolMicrosPerNode", "1000").toLong
     val t = Tables(spark, dir)
     // Loop-shuffle sizing (the r3 lesson: size iterative-loop shuffles
@@ -1276,10 +1276,9 @@ object Relational {
     // session's actual parallelism, so it scales DOWN with the core
     // count too, never a local[32] constant.
     val nPart = math.max(1, math.min(
-      spark.conf.get("graft.q36.loopPartitions",
-        math.max(spark.sparkContext.defaultParallelism / 4,
-          t.lineitem.count() / 500000 + 1).toString).toInt,
-      spark.sparkContext.defaultParallelism * 4))
+      math.max(spark.sparkContext.defaultParallelism / 4,
+        t.lineitem.count() / 500000 + 1),
+      spark.sparkContext.defaultParallelism * 4).toInt)
     val e0 = t.orders
       .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
@@ -1397,31 +1396,12 @@ object Relational {
       .localCheckpoint(true)
     var roundsDone = 0
     var converged = false
-    // Loop-width pin: a round consumes ranks partitioned hash(node,
-    // nPart) (ed's layout) and produces them from an agg exchange of
-    // width spark.sql.shuffle.partitions — with the session default the
-    // two widths differ, so every round pays TWO node-table exchanges
-    // (the agg's, then a re-shuffle into ed's layout for the next
-    // join). Pinning the loop's shuffle width to nPart — and holding
-    // AQE partition coalescing off so the width sticks — makes the agg
-    // exchange itself land in ed's layout: the join side of every
-    // round is exchange-free, ONE node-table exchange per round
-    // (measured 6.3 s → 4.6 s warm at sf0.1, 20 rounds). Scale-
-    // adaptive, not a local[32] constant: nPart derives from the input
-    // row count. Confs are restored before the returned frame is ever
-    // planned (try/finally; fn's caller plans it after return).
-    // SINGLE-THREADED-SESSION assumption (r17 advice): the pin mutates
-    // session-global confs for the loop's duration, so a query planned
-    // CONCURRENTLY on the same SparkSession would inherit the width.
-    // The driver contract runs queries serially; a shared-session
-    // deployment must scope this via its own session clone
-    // (SparkSession.newSession shares the context and cache).
-    val oldSp = spark.conf.get("spark.sql.shuffle.partitions")
-    val oldCo = spark.conf.get(
-      "spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", nPart.toString)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
+    // Loop-width pin at nPart: a round consumes ranks partitioned
+    // hash(node, nPart) (ed's layout), so an agg exchange of the same
+    // width makes the join side of every round exchange-free — ONE
+    // node-table exchange per round instead of two (measured 6.3 s →
+    // 4.6 s warm at sf0.1, 20 rounds).
+    Tables.withLoopWidth(spark, nPart) {
     while (!converged && roundsDone < cap) {
       val prev = pr
       var cur = pr
@@ -1468,9 +1448,6 @@ object Relational {
       // overflow-safe for any tol and block-size-independent)
       if (delta / (math.max(1L, nn) * n) < tolPerNode) converged = true
     }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", oldSp)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", oldCo)
     }
     q36AdoptedRounds.put(dir, roundsDone)
     pr.join(d, col("node") === col("src"))

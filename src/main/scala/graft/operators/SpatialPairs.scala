@@ -18,7 +18,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * d²/haversine filter keeps the exact neighborhood — per-station work
   * is bounded by local density, never by n. Same two-rung structure as
   * [[graft.functions.Vectors.codebookArgmaxCid]]'s InlineCodebookK
-  * gate; crossover measured by [[graft.StationPairBench]] (SURVEY §7).
+  * gate; crossover measured in SURVEY §7.
   */
 object SpatialPairs {
 
@@ -26,7 +26,7 @@ object SpatialPairs {
     * tile-bucket rung. At n = 4096 the pair space is ≤ 16.8 M rows —
     * a broadcast join clears that in well under a second, cheaper than
     * the tile rung's explode + shuffle setup; past it the quadratic
-    * term takes over (crossover measured in StationPairBench). */
+    * term takes over (SURVEY §7). */
   val AllPairsGate = 4096
 
   /** Fallback-inlining cap for [[nearestStation]]: up to this many
@@ -65,7 +65,7 @@ object SpatialPairs {
     // (measured: i54 2.75→16.8 s, i55 2.0→16.7 s at ×10 SF). The
     // stat-gated spread pins probe width structurally (the §1
     // counterpart-risk discipline); at real fact widths it is a no-op.
-    val sa = graft.Tables.spreadKeys(a, Seq(ax, ay))
+    val sa = graft.Tables.spread(a, ax, ay)
     if (nStations <= gate) {
       sa.join(broadcast(b), d2 <= maxD2)
     } else {
@@ -135,8 +135,7 @@ object SpatialPairs {
     // id is the one guaranteed-distinct column, and the argmin's
     // groupBy(station) reuses the spread's hashpartitioning with no
     // further exchange — the pair stream never crosses a shuffle)
-    val a = graft.Tables.spreadKeys(
-      st.toDF("station", "lat", "lon"), Seq("station"))
+    val a = graft.Tables.spread(st.toDF("station", "lat", "lon"), "station")
     val b = st.toDF("other", "blat", "blon")
     val km = haversineKm(col("lat"), col("lon"), col("blat"), col("blon"))
     def argmin(pairs: DataFrame): DataFrame = pairs
@@ -178,7 +177,7 @@ object SpatialPairs {
       else if (un.length <= inlineFallbackCap) {
         val lits = un.map(r => struct(lit(r.getLong(0)).as("station"),
           lit(r.getDouble(1)).as("ulat"), lit(r.getDouble(2)).as("ulon")))
-        val fb = graft.Tables.spreadKeys(b, Seq("other"))
+        val fb = graft.Tables.spread(b, "other")
           .select(col("other"), col("blat"), col("blon"),
             explode(array(lits.toIndexedSeq: _*)).as("u"))
           .filter(col("u.station") =!= col("other"))

@@ -747,17 +747,12 @@ object TextAnalysis {
     * stream is ~8× the scan and each round sorts it through six window
     * exprs — measured sweet spot 8-9 partitions on a 580 KB corpus at
     * BOTH 8 and 32 cores; p/4 serialized the 8-core loop, p fanned the
-    * 32-core loop into tiny sort tasks), capped at the core count.
-    * Conf-overridable for sweeps; never a local[32] constant. */
+    * 32-core loop into tiny sort tasks), capped at the core count;
+    * never a local[32] constant. */
   private[graft] def bpeLoopWidth(docs: DataFrame): Int = {
-    val sess = docs.sparkSession
-    val p = sess.sparkContext.defaultParallelism
-    sess.conf.get("graft.bpe.loopPartitions", "").trim match {
-      case "" =>
-        val bytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-        (bytes / (64L * 1024)).min(BigInt(p)).max(BigInt(2)).toInt
-      case v => v.toInt
-    }
+    val p = docs.sparkSession.sparkContext.defaultParallelism
+    val bytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
+    (bytes / (64L * 1024)).min(BigInt(p)).max(BigInt(2)).toInt
   }
 
   /** The multi-merge rewrite round: apply a BATCH of merges whose token

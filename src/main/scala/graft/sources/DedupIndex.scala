@@ -149,7 +149,7 @@ object DedupIndex {
     // sets then materialize from that cache, never the parquet again.
     // The previous per-band scan+distinct rounds cost 4 table scans
     // and 4 shuffles — measured 6.9 s vs 0.7 s at the ×10 corpus
-    // (ProfileSt16, r11). Same distinct keys: distinct pairs filtered
+    // (r11). Same distinct keys: distinct pairs filtered
     // to one band ≡ distinct hashes within that band.
     val merged = readBands(spark, indexDir)
       .select(col("band_idx"), col("band_hash")).distinct().persist()

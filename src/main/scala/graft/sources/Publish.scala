@@ -21,18 +21,9 @@ object Publish {
   def writeDatePartitioned(df: DataFrame, outDir: String, namespace: String,
       dateCol: String): IngestPayload = {
     val path = s"$outDir/$namespace"
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      df.withColumn("date_key", date_format(col(dateCol), "yyyy-MM-dd"))
-        .write.mode("overwrite").partitionBy("date_key").parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    df.withColumn("date_key", date_format(col(dateCol), "yyyy-MM-dd"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("date_key").parquet(path)
     IngestPayload(namespace, path, "parquet")
   }
 

@@ -285,20 +285,11 @@ object Streaming {
       .withColumn("d_key", date_format(col("ts"), "yyyy-MM-dd"))
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // scoped overwrite-mode override (same save/restore discipline
-        // as Publish.writeDatePartitioned — a sink must not leave the
-        // session's overwrite semantics changed for whatever runs next)
-        val conf = batch.sparkSession.conf
-        val prev = conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try batch.write
+        batch.write
           .mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
           .partitionBy("d_key")
           .parquet(sinkDir)
-        finally prev match {
-          case Some(v) => conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
       }
       .trigger(Trigger.AvailableNow())
       // STABLE checkpoint path: a fresh path per run would forfeit the
@@ -1182,7 +1173,7 @@ object Streaming {
       // single-row-group source file scans as ONE partition, which
       // serializes the whole 16-lane md5 pass onto one core (measured:
       // the signature pass, not the joins, is the per-batch cost —
-      // ProfileSt16, r11). One round-robin exchange of the batch's
+      // r11). One round-robin exchange of the batch's
       // text bytes buys full-width CPU; sized by the session's
       // stream-volume shuffle partitions, so at cluster scale it
       // follows the executor count.

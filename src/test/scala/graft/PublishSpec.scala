@@ -72,10 +72,12 @@ class PublishSpec extends SparkSpec {
   }
 
   test("GraftConf builder carries the graft function extensions") {
-    // the shared test session predates GraftConf, so just validate the
-    // builder constructs (extensions apply at session-create time)
-    val b = GraftConf.builder("local[1]", 1)
-    assert(b != null)
+    // a sibling session gets a fresh function registry built from the
+    // context's extensions, so no per-session registration by an earlier
+    // test can stand in for the builder's GraftExtensions
+    val r = spark.newSession().sql("SELECT graft_dot(array(1d, 2d), array(3d, 4d))")
+      .collect()(0)
+    assert(r.getDouble(0) == 11.0)
   }
 
   test("permissive csv read surfaces corrupt records instead of failing") {

@@ -1,0 +1,39 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** One session shape: every harness and spec builds its session through
+  * [[GraftConf.builder]], so the session users get is the one the
+  * oracle checks and the benchmarks time. `Sf1Data` and `SkewData`
+  * keep their own builders because the corpora they write (and the
+  * digests checked against them) were generated on those sessions. */
+class SessionBuilderSpec extends AnyFunSuite {
+
+  private val allowed = Set("GraftConf.scala", "Sf1Data.scala", "SkewData.scala")
+
+  /** Source files under src/main/scala whose code (comments stripped)
+    * calls `SparkSession.builder()`. */
+  private def builderSites(): Seq[Path] = {
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .filter { f =>
+        val code = Files.readString(f)
+          .replaceAll("(?s)/\\*.*?\\*/", "")
+          .replaceAll("//[^\n]*", "")
+        code.contains("SparkSession.builder()")
+      }
+    finally walk.close()
+  }
+
+  test("SparkSession.builder() is called only by GraftConf, Sf1Data and SkewData") {
+    val sites = builderSites()
+    // the scan sees code at all: GraftConf's own call is found
+    assert(sites.exists(_.getFileName.toString == "GraftConf.scala"), sites)
+    val stray = sites.filterNot(f => allowed(f.getFileName.toString))
+    assert(stray.isEmpty, s"build the session via GraftConf.builder in: ${stray.mkString(", ")}")
+  }
+}

@@ -5,13 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all specs — one local[4] session per suite. */
 abstract class SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftConf.builder("local[4]", 4)
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   val sf = "/root/testdata/sf0.001"
