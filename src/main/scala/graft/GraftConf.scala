@@ -23,5 +23,11 @@ object GraftConf {
       // oracle parity + reference convention (all data is UTC)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // Spark's default 100-entry codegen cache is smaller than one
+      // ingest cycle's working set, so every scheduled cycle recompiled
+      // ~55 classes; 2000 keeps them warm. Static and JVM-wide: Spark
+      // sizes the cache once, when the JVM first generates code, so it
+      // can only be set here at build time, never per query.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .withExtensions(new GraftExtensions)
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
@@ -190,12 +191,25 @@ final class Jobs(spark: SparkSession, statePath: String,
       if (n == 0) JobResult(cfg.datasetId, 0L, skipped = true, None) // "No update required"
       else {
         val newMax = meta.getString(1)
-        // date keys come from the TRANSFORMED slice (a curation
+        // the transformed slice is computed ONCE, up front, into
+        // executor blocks whose plan no longer reads the transform's
+        // sources: the date keys, publish, index and JDBC legs all see
+        // the slice that was decided. A write to a path the transform
+        // reads (a curation transform dedups against the corpus it
+        // publishes into) can no longer change what gets indexed or
+        // upserted. Date keys come from this slice (a curation
         // transform may drop whole dates — a date that published no
-        // file must not notify); cached so the distinct-dates job and
-        // the publish share one transform computation
-        val transformed = cfg.transform(fresh).persist()
+        // file must not notify). Trade-off: a local checkpoint has no
+        // lineage, so losing an executor's blocks fails this dataset's
+        // cycle; the watermark has not moved, so the next cycle
+        // retries the slice.
+        val transformed = cfg.transform(fresh).localCheckpoint(eager = false)
+        // unpersisting the Dataset does not release a local checkpoint:
+        // the checkpointed RDD's blocks are released themselves, also
+        // when computing the slice fails
+        val blocks = transformed.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
         val (payload, dateKeys) = try {
+          blocks.foreach(_.count())
           val keys = transformed
             .select(date_format(col(cfg.tsCol), "yyyy-MM-dd").as("k"))
             .distinct().collect().map(_.getString(0)).sorted.toSeq
@@ -221,7 +235,7 @@ final class Jobs(spark: SparkSession, statePath: String,
               date_format(col(cfg.tsCol), "yyyy-MM-dd")),
             j.url, j.table, j.dateCol))
           (p, keys)
-        } finally transformed.unpersist()
+        } finally blocks.foreach(_.unpersist())
         // notify per published date AFTER the partition committed,
         // BEFORE the watermark advances (reference: send_ingest_command
         // after upload, update_state after) — at-least-once delivery

@@ -1,8 +1,7 @@
 package graft.sources
 
-import graft.operators.Ingest
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 
 /** Ingestion state — the reference's `state.json` watermark store
   * (`ingest/utils.py:96` read_state / update_state, atomic_write) made
@@ -11,47 +10,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - updates are APPENDS of (dataset_id, key, value, seq) rows —
   *     parquet file appends are atomic at the file level, the analogue
   *     of the reference's write-temp-then-rename;
-  *   - reads compact the log with latest-per-key
-  *     ([[Ingest.latestSnapshot]]) — so concurrent writers can't
+  *   - reads take latest-per-key by `seq` — so concurrent writers can't
   *     corrupt state, they only race on who is "latest";
-  *   - at 100 TB / many datasets the log is tiny and the compaction is
-  *     one broadcast-size shuffle; periodically rewriting the log to
-  *     its compacted form bounds growth.
+  *   - a read is ONE scan of the log with its known schema, filtered
+  *     to the dataset, merged on the driver: the rows it collects are
+  *     O(updates of that dataset), never O(data), and no schema
+  *     inference or shuffle job runs; periodically rewriting the log
+  *     to its compacted form bounds that row count.
   */
 final class StateStore(spark: SparkSession, path: String) {
   import spark.implicits._
 
-  private def log: Option[DataFrame] =
-    // Only a missing path reads as "no state yet"; any other failure
-    // (corrupt log, permission, schema drift) must propagate — silently
-    // treating it as empty would restart ingestion from scratch.
-    try {
-      val df = spark.read.parquet(path)
-      if (df.isEmpty) None else Some(df)
-    } catch {
-      // UNABLE_TO_INFER_SCHEMA: the directory exists but holds no
-      // readable parquet (aborted first write, leftover _temporary) —
-      // also "no state yet"; treating it as fatal would wedge every
-      // subsequent cycle until the dir is hand-deleted.
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition != null &&
-            (e.getCondition.startsWith("PATH_NOT_FOUND") ||
-              e.getCondition.startsWith("UNABLE_TO_INFER_SCHEMA")) => None
-    }
+  /** The log's row shape, as [[update]] writes it. */
+  private val LogSchema = "dataset_id STRING, key STRING, value STRING, seq BIGINT"
 
-  /** Current state of one dataset: latest value per key. */
+  /** Current state of one dataset: latest value per key. Only a
+    * missing path reads as "no state yet" (as does a directory holding
+    * no data file, e.g. an aborted first write's `_temporary`: the
+    * explicit schema reads it as empty); any other failure (corrupt
+    * log, permission) must propagate — silently treating it as empty
+    * would restart ingestion from scratch. */
   def state(datasetId: String): Map[String, String] = {
-    log match {
-      case None => Map.empty
-      case Some(df) =>
-        Ingest.latestSnapshot(
-            df.filter(col("dataset_id") === datasetId),
-            Seq(col("dataset_id"), col("key")), Seq(col("seq")))
-          .select(col("key"), col("value"))
-          .collect()
-          .map(r => r.getString(0) -> r.getString(1))
-          .toMap
-    }
+    val rows =
+      try spark.read.schema(LogSchema).parquet(path)
+        .filter(col("dataset_id") === datasetId)
+        .select("key", "value", "seq")
+        .collect()
+      catch {
+        case e: AnalysisException
+            if e.getCondition != null && e.getCondition.startsWith("PATH_NOT_FOUND") =>
+          Array.empty[Row]
+      }
+    rows.groupBy(_.getString(0))
+      .map { case (k, rs) => k -> rs.maxBy(_.getLong(2)).getString(1) }
   }
 
   /** The watermark convention used by the reference ("last_update"). */

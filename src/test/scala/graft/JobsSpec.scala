@@ -493,4 +493,88 @@ class JobsSpec extends SparkSpec {
     // idempotent: nothing left to compact
     assert(DedupIndex.compactFragmented(spark, idxDir, maxFilesPerPartition = 2).isEmpty)
   }
+
+  test("a transform that reads its own published corpus indexes the slice it published") {
+    // the curation shape of "document curation as an incremental job":
+    // quality gate, exact dedup in the slice, then exact and near-dup
+    // prune against the corpus the job publishes into. Publishing that
+    // slice must not change what the index leg sees afterwards.
+    import graft.sources.DedupIndexSpec
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_jobs_recache").toString
+    val src = s"$root/docs_src"
+    val out = s"$root/out"
+    val corpusPath = s"$out/docs"
+    val idxDir = s"$root/index"
+    def docRows(rows: Seq[(Long, String, String)]) = rows
+      .map { case (id, day, text) =>
+        (id, java.sql.Timestamp.valueOf(s"2024-03-$day 00:00:00"), text)
+      }.toDF("doc_id", "ts", "text")
+    def curate(slice: DataFrame): DataFrame = {
+      val gated = slice.filter(size(split(col("text"), " ")) >= 5)
+        .withColumn("h", md5(col("text")))
+        .withColumn("rn", row_number().over(Window.partitionBy(col("h")).orderBy(col("doc_id"))))
+        .filter(col("rn") === 1).drop("rn")
+      if (!new java.io.File(corpusPath).exists()) gated.drop("h")
+      else {
+        val published = spark.read.parquet(corpusPath)
+        val exactKept = gated.join(
+          published.select(md5(col("text")).as("h")).distinct(), Seq("h"), "left_anti")
+        def sh(df: DataFrame, id: String) = df.select(col("doc_id").as(id),
+          array_distinct(graft.functions.Text.shingles(split(col("text"), " "), 3)).as(s"sh_$id"))
+        val near = sh(exactKept, "bid").join(sh(published, "cid"))
+          .filter(size(array_intersect(col("sh_bid"), col("sh_cid"))).cast("double") /
+            size(array_union(col("sh_bid"), col("sh_cid"))) >= 0.5)
+          .select(col("bid").as("doc_id")).distinct()
+        exactKept.drop("h").join(near, Seq("doc_id"), "left_anti")
+      }
+    }
+    val cfg = JobConfig("docs", s => s.read.parquet(src), "ts", curate, out,
+      retentionDays = 365, index = Some(DedupIndexSpec(idxDir)))
+    val jobs = new Jobs(spark, s"$root/state").register(cfg)
+    def corpusIds() = spark.read.parquet(corpusPath).select("doc_id")
+      .collect().map(_.getLong(0)).toSet
+    val base = "the quick brown fox jumps over a lazy dog near the river bank today"
+    docRows(Seq((1L, "01", base), (2L, "01", "a second document on another topic entirely")))
+      .write.mode("overwrite").parquet(src)
+    assert(!jobs.run(cfg, 1).skipped)
+    val before = corpusIds()
+    // cycle 2: an exact copy of the corpus (pruned) and two new docs
+    docRows(Seq(
+      (10L, "02", base),
+      (11L, "02", "completely different content about spark shuffles and parquet scans"),
+      (12L, "02", "weather stations report daily precipitation totals for the archive")))
+      .write.mode("append").parquet(src)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    assert(jobs.run(cfg, 2).ingested == 3L)
+    val gained = corpusIds() -- before
+    assert(gained == Set(11L, 12L), gained.mkString(","))
+    for (t <- Seq("hashes", "bands")) {
+      val part = s"$idxDir/$t/date_key=2024-03-02"
+      assert(new java.io.File(part).isDirectory, s"$t holds no partition for cycle 2's date")
+      val indexed = spark.read.parquet(part).select("doc_id").distinct()
+        .collect().map(_.getLong(0)).toSet
+      assert(indexed == gained, s"$t indexed ${indexed.mkString(",")}")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+      "the cycle left cached blocks behind")
+  }
+
+  test("a transform failing mid-computation leaves no cached blocks behind") {
+    import spark.implicits._
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_jobs_leak").toString
+    val src = s"$root/src"
+    Seq((java.sql.Timestamp.valueOf("2024-02-01 00:00:00"), 1.0))
+      .toDF("ts", "v").write.mode("overwrite").parquet(src)
+    val cfg = JobConfig("dsL", s => s.read.parquet(src), "ts",
+      df => df.withColumn("v", when(col("v") > 0, raise_error(lit("boom"))).otherwise(col("v"))),
+      s"$root/out", retentionDays = 30)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception](new Jobs(spark, s"$root/state").run(cfg, 1))
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore)
+  }
 }

@@ -80,6 +80,12 @@ class PublishSpec extends SparkSpec {
     assert(r.getDouble(0) == 11.0)
   }
 
+  test("GraftConf builder sizes the codegen cache") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000",
+      "Spark's default 100 entries is below one ingest cycle's working set: " +
+        "every scheduled cycle would recompile its generated classes")
+  }
+
   test("permissive csv read surfaces corrupt records instead of failing") {
     import org.apache.spark.sql.types._
     val dir = Files.createTempDirectory("graft_csv")
