@@ -1,7 +1,13 @@
 package graft.sources
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, date_format}
+import org.apache.spark.sql.types.StringType
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
@@ -181,16 +187,16 @@ final class Jobs(spark: SparkSession, statePath: String,
   }.toSeq
 
   def run(cfg: JobConfig, seq: Long): JobResult = {
-    val fresh = state.freshSince(cfg.datasetId, cfg.source(spark), cfg.tsCol).persist()
-    try {
-      import org.apache.spark.sql.functions.{col, count, date_format, lit, max}
-      // one metadata prepass decides BOTH the skip and the new watermark
-      // (count + max in a single job over the cache fill, not two)
-      val meta = fresh.agg(count(lit(1)), max(col(cfg.tsCol)).cast("string")).collect()(0)
-      val n = meta.getLong(0)
-      if (n == 0) JobResult(cfg.datasetId, 0L, skipped = true, None) // "No update required"
-      else {
-        val newMax = meta.getString(1)
+    // each materialization below is ONE Spark job that also returns what
+    // the cycle needs of it. `fresh` is a local checkpoint, not a
+    // persist(): with AQE on cached plans the first action on a cache
+    // pays its own table-cache stage job, and a count + max aggregate
+    // over it adds a shuffle map job and a result job
+    val (fresh, freshBlocks) = checkpoint(
+      state.freshSince(cfg.datasetId, cfg.source(spark), cfg.tsCol))
+    try summarize(fresh, cfg.tsCol, withKeys = false) match {
+      case (_, None, _) => JobResult(cfg.datasetId, 0L, skipped = true, None) // "No update required"
+      case (n, Some(newMax), _) =>
         // the transformed slice is computed ONCE, up front, into
         // executor blocks whose plan no longer reads the transform's
         // sources: the date keys, publish, index and JDBC legs all see
@@ -199,20 +205,13 @@ final class Jobs(spark: SparkSession, statePath: String,
         // publishes into) can no longer change what gets indexed or
         // upserted. Date keys come from this slice (a curation
         // transform may drop whole dates — a date that published no
-        // file must not notify). Trade-off: a local checkpoint has no
-        // lineage, so losing an executor's blocks fails this dataset's
-        // cycle; the watermark has not moved, so the next cycle
-        // retries the slice.
-        val transformed = cfg.transform(fresh).localCheckpoint(eager = false)
-        // unpersisting the Dataset does not release a local checkpoint:
-        // the checkpointed RDD's blocks are released themselves, also
-        // when computing the slice fails
-        val blocks = transformed.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+        // file must not notify), in the same pass that fills it.
+        // Trade-off: a local checkpoint has no lineage, so losing an
+        // executor's blocks fails this dataset's cycle; the watermark
+        // has not moved, so the next cycle retries the slice.
+        val (transformed, blocks) = checkpoint(cfg.transform(fresh))
         val (payload, dateKeys) = try {
-          blocks.foreach(_.count())
-          val keys = transformed
-            .select(date_format(col(cfg.tsCol), "yyyy-MM-dd").as("k"))
-            .distinct().collect().map(_.getString(0)).sorted.toSeq
+          val (_, _, keys) = summarize(transformed, cfg.tsCol, withKeys = true)
           // transactional = the manifest-committed DSv2 writer
           // (PublishedTable): per-date upsert lands as ONE atomic
           // manifest swap, so a concurrent reader's snapshot is never
@@ -235,7 +234,7 @@ final class Jobs(spark: SparkSession, statePath: String,
               date_format(col(cfg.tsCol), "yyyy-MM-dd")),
             j.url, j.table, j.dateCol))
           (p, keys)
-        } finally blocks.foreach(_.unpersist())
+        } finally blocks.unpersist()
         // notify per published date AFTER the partition committed,
         // BEFORE the watermark advances (reference: send_ingest_command
         // after upload, update_state after) — at-least-once delivery
@@ -263,7 +262,48 @@ final class Jobs(spark: SparkSession, statePath: String,
           DedupIndex.compactFragmented(spark, ix.indexDir)
         }
         JobResult(cfg.datasetId, n, skipped = false, Some(payload), dateKeys)
+    } finally freshBlocks.unpersist()
+  }
+
+  /** `df` as a local checkpoint that no action has filled yet, and the
+    * checkpointed RDD. Unpersisting the Dataset does not release a
+    * local checkpoint: callers release the RDD's blocks themselves, also
+    * when filling it fails. */
+  private def checkpoint(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
+    val cp = df.localCheckpoint(eager = false)
+    (cp, cp.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }.head)
+  }
+
+  /** One pass over `df` (one Spark job; for a local checkpoint, the job
+    * that fills it): its row count, the max of `tsCol` as
+    * `max(col(tsCol)).cast("string")` renders it under the session time
+    * zone (None when no row has a `tsCol`), and, when `withKeys`, the
+    * sorted distinct `yyyy-MM-dd` keys of `tsCol`. The max is compared
+    * in the column's own type, per partition and then on the driver. */
+  private def summarize(df: DataFrame, tsCol: String,
+      withKeys: Boolean): (Long, Option[String], Seq[String]) = {
+    val dt = df.schema(tsCol).dataType
+    val cols = col(tsCol) +: (if (withKeys) Seq(date_format(col(tsCol), "yyyy-MM-dd")) else Nil)
+    val parts = df.select(cols: _*).queryExecution.toRdd.mapPartitions { rows =>
+      val ord = TypeUtils.getInterpretedOrdering(dt)
+      var n = 0L
+      var max: Any = null
+      val keys = mutable.HashSet.empty[String]
+      rows.foreach { r =>
+        n += 1
+        if (!r.isNullAt(0)) {
+          val v = r.get(0, dt)
+          if (max == null || ord.gt(v, max)) max = InternalRow.copyValue(v)
+          if (withKeys) keys += r.getUTF8String(1).toString
+        }
       }
-    } finally fresh.unpersist()
+      Iterator((n, max, keys.toSet))
+    }.collect()
+    val maxes = parts.map(_._2).filter(_ != null)
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val newMax = if (maxes.isEmpty) None
+      else Some(Cast(Literal(maxes.max(TypeUtils.getInterpretedOrdering(dt)), dt),
+        StringType, Some(tz)).eval().toString)
+    (parts.map(_._1).sum, newMax, parts.flatMap(_._3).distinct.sorted.toSeq)
   }
 }

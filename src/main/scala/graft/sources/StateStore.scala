@@ -59,11 +59,14 @@ final class StateStore(spark: SparkSession, path: String) {
     * the incremental cycle, with NO state mutation (callers that
     * publish should advance the watermark only AFTER the publish
     * succeeds; see [[graft.sources.Jobs]]). Missing watermark ⇒ full
-    * ingest. */
+    * ingest. Rows with a null `tsCol` are never fresh, on the initial
+    * load as on every later cycle (where `ts > w` is never true for
+    * null): they carry no date to publish under and no time to move
+    * the watermark to. */
   def freshSince(datasetId: String, df: DataFrame, tsCol: String): DataFrame =
     watermark(datasetId) match {
       case Some(w) => df.filter(col(tsCol) > lit(w).cast(df.schema(tsCol).dataType))
-      case None    => df
+      case None    => df.filter(col(tsCol).isNotNull)
     }
 
   /** Incremental-ingest cycle, reference `DataIngest.run` shape: take

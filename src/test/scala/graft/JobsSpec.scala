@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{JobConfig, Jobs, Notifier}
+import graft.sources.{JobConfig, Jobs, Notifier, StateStore}
 import org.apache.spark.sql.functions._
 
 class JobsSpec extends SparkSpec {
@@ -576,5 +576,123 @@ class JobsSpec extends SparkSpec {
     val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     intercept[Exception](new Jobs(spark, s"$root/state").run(cfg, 1))
     assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore)
+  }
+
+  test("a source failing mid-computation leaves no cached blocks and no watermark") {
+    import spark.implicits._
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_jobs_srcleak").toString
+    val src = s"$root/src"
+    Seq((java.sql.Timestamp.valueOf("2024-02-01 00:00:00"), 1.0))
+      .toDF("ts", "v").write.mode("overwrite").parquet(src)
+    val cfg = JobConfig("dsS", s => s.read.parquet(src)
+        .withColumn("v", when(col("v") > 0, raise_error(lit("boom"))).otherwise(col("v"))),
+      "ts", identity, s"$root/out", retentionDays = 30)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception](new Jobs(spark, s"$root/state").run(cfg, 1))
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore)
+    assert(new StateStore(spark, s"$root/state").watermark("dsS").isEmpty)
+  }
+
+  test("an initial load drops null-ts rows: the dated rows publish and the next cycle skips") {
+    import spark.implicits._
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_jobs_nullts").toString
+    val src = s"$root/src"
+    Seq(Some("2024-06-01 08:00:00"), None, Some("2024-06-02 09:30:00")).toDF("s")
+      .select(col("s").cast("timestamp").as("ts"), lit(1.0).as("v"))
+      .write.mode("overwrite").parquet(src)
+    val cfg = JobConfig("dsN", s => s.read.parquet(src), "ts", identity,
+      s"$root/out", retentionDays = 30)
+    val jobs = new Jobs(spark, s"$root/state").register(cfg)
+    val r1 = jobs.run(cfg, 1)
+    assert(!r1.skipped && r1.ingested == 2L)
+    assert(r1.publishedDates == Seq("2024-06-01", "2024-06-02"))
+    assert(spark.read.parquet(s"$root/out/dsN").count() == 2)
+    assert(new StateStore(spark, s"$root/state").watermark("dsN").contains("2024-06-02 09:30:00"))
+    assert(jobs.run(cfg, 2).skipped)
+  }
+
+  /** Spark jobs started by `body`, counted in their own job group; a
+    * marker job after it flushes the async listener bus. */
+  private def jobsOf(body: => Unit): Int = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new AtomicInteger()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("jobs-cycle") => started.incrementAndGet()
+          case Some("jobs-marker") => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("jobs-cycle", "one Jobs.run")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("jobs-marker", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(30, TimeUnit.SECONDS), "listener bus did not flush")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a data cycle runs 5 Spark jobs and a skip cycle 2") {
+    import spark.implicits._
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_jobs_count").toString
+    val src = s"$root/src"
+    def land(day: Int): Unit =
+      Seq((java.sql.Timestamp.valueOf(f"2024-05-$day%02d 00:00:00"), day.toDouble))
+        .toDF("ts", "v").write.mode("append").parquet(src)
+    // an explicit schema: inferring it would add a job of its own
+    val cfg = JobConfig("dsJ", s => s.read.schema("ts TIMESTAMP, v DOUBLE").parquet(src),
+      "ts", identity, s"$root/out", retentionDays = 30)
+    val jobs = new Jobs(spark, s"$root/state").register(cfg)
+    land(1)
+    assert(!jobs.run(cfg, 1).skipped) // the initial load: no state log to read yet
+    land(2)
+    // watermark read, fresh pass, slice pass, publish, state append
+    assert(jobsOf(assert(jobs.run(cfg, 2).ingested == 1L)) == 5)
+    // watermark read, fresh pass
+    assert(jobsOf(assert(jobs.run(cfg, 3).skipped)) == 2)
+  }
+
+  test("the watermark and notified dates match Spark's max cast and date_format for every ts type") {
+    import spark.implicits._
+    import java.nio.file.Files
+    val cases = Seq(
+      "TIMESTAMP" -> Seq("2024-03-01 06:00:00.25", "2024-02-28 23:59:59.999999",
+        "2024-03-01 06:00:00.2", "2024-02-29 12:00:00"),
+      "TIMESTAMP_NTZ" -> Seq("2024-03-01 06:00:00.25", "2024-02-28 23:59:59.999999",
+        "2024-03-01 06:00:00.2", "2024-02-29 12:00:00"),
+      "DATE" -> Seq("2024-03-01", "2024-02-28", "2024-02-29", "2024-03-01"))
+    for ((tpe, values) <- cases) {
+      val root = Files.createTempDirectory("graft_jobs_parity").toString
+      val src = s"$root/src"
+      // one file per row, so the pass merges maxima across partitions
+      values.toDF("s").select(col("s").cast(tpe).as("ts"), lit(1.0).as("v"))
+        .repartition(values.size).write.mode("overwrite").parquet(src)
+      val notified = scala.collection.mutable.ArrayBuffer.empty[String]
+      val notifier = new Notifier {
+        override def notifyIngest(datasetId: String, dateKey: String,
+            payload: graft.sources.Publish.IngestPayload): Unit = notified += dateKey
+      }
+      val cfg = JobConfig("dsT", s => s.read.parquet(src), "ts", identity,
+        s"$root/out", retentionDays = 30)
+      val jobs = new Jobs(spark, s"$root/state", notifier).register(cfg)
+      assert(!jobs.run(cfg, 1).skipped, tpe)
+      val rows = spark.read.parquet(src)
+      val wantMax = rows.agg(max(col("ts")).cast("string")).head().getString(0)
+      val wantKeys = rows.select(date_format(col("ts"), "yyyy-MM-dd")).distinct()
+        .collect().map(_.getString(0)).sorted.toSeq
+      assert(new StateStore(spark, s"$root/state").watermark("dsT").contains(wantMax), tpe)
+      assert(notified.toSeq == wantKeys, tpe)
+      assert(jobs.run(cfg, 2).skipped, tpe)
+    }
   }
 }
