@@ -3,74 +3,19 @@ package graft
 import graft.operators._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
+/** Driver contract — see SURVEY.md §2 for the inventory.
+  *
+  * A query reads its session's conf and never writes it: only
+  * [[GraftConf.builder]] sets session policy, at build time. A session
+  * not built by it must at least carry
+  * `spark.sql.legacy.parquet.nanosAsLong=true` to read `events`. */
 object SparkEntry {
-
-  /** Engine execution-policy defaults, applied to the session the first
-    * time any graft query is built (idempotent, never restored — they
-    * must be live when the caller later runs the action that plans the
-    * query). Both are scale-independent AQE *policies*, not local-mode
-    * constants (opt guide §2.2 "let AQE coalesce small partitions"):
-    *
-    *  - `coalescePartitions.parallelismFirst=false`: coalesce post-
-    *    shuffle partitions toward `advisoryPartitionSizeInBytes` (64 MB
-    *    default) instead of stopping at the session parallelism. With
-    *    the default (true), a KB-sized shuffle still fans out to one
-    *    tiny task per core — measured 0.2-0.7 s of pure task overhead
-    *    per query at bench SF (the whole suite ran FASTER at 8 cores
-    *    than 32: 167 s vs 206 s). At 100 TB partitions exceed the
-    *    advisory size and this setting is a no-op; Spark's own docs
-    *    recommend false on busy clusters.
-    *  - `canChangeCachedPlanOutputPartitioning=true`: AQE (including
-    *    the coalescing above) also applies to the plans that
-    *    materialize persisted intermediates. The default (false) only
-    *    exists to keep a cache's output partitioning reusable by
-    *    consumers; for intra-query caches of small aggregates that
-    *    stability is pure cost — every consumer job inherits session-
-    *    parallelism-many KB-sized blocks AND the cache's 32-wide
-    *    partitioning propagates through every post-cache stage.
-    *    Measured on 2×2 full-suite runs: 32c total 207→190 s, 8c
-    *    neutral (160 vs 162-175 s run spread).
-    *
-    * A query whose post-shuffle work NEEDS width even on small data
-    * (an expensive per-row kernel after an exchange) must pin that
-    * width structurally (spread / explicit repartition), not rely on
-    * tiny-partition fan-out the coalescer is designed to remove.
-    *
-    * Overridable: a session that has explicitly set a key (at build
-    * time) keeps its value — we only fill in unset keys relative to
-    * Spark's built-in defaults. */
-  def applySessionDefaults(spark: SparkSession): Unit = {
-    // Coalescing floor: parallelismFirst=false alone lets AQE coalesce
-    // any sub-advisory exchange to ONE partition, which serializes the
-    // FINAL aggregation/probe stage of every small-but-compute-carrying
-    // keyed table (measured: d13's pair-count agg, q34/q40's value-grid
-    // merge, t06's vocab merge — each 0.1-0.5 s slower at 32c than
-    // under stock Spark's defaultParallelism floor). An eighth of the
-    // session parallelism keeps those finals parallel while retaining
-    // ~all of the tiny-task reduction (stock Spark floors at p itself —
-    // this is 8× more coalescing, not less). Scale-derived, never a
-    // local constant: floor 4 at local[32], 1 at local[8]; on a large
-    // cluster the floor only binds for exchanges smaller than
-    // floor × advisory (64 MB), where a p/8 fan-out is noise.
-    val floor = math.max(1, spark.sparkContext.defaultParallelism / 8)
-    val defaults = Seq(
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-      "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> floor.toString,
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
-    defaults.foreach { case (k, v) =>
-      if (!spark.sparkContext.getConf.contains(k)) spark.conf.set(k, v)
-    }
-  }
-
-  private def tuned(d: QueryDef): QueryDef =
-    d.copy(fn = (spark, dir) => { applySessionDefaults(spark); d.fn(spark, dir) })
 
   /** All operator definitions, one QueryDef per SURVEY.md §2 line. */
   def defs: Seq[QueryDef] =
     (Relational.all ++ Ingest.all ++ Temporal.all ++ Scale.all ++
       TextAnalysis.all ++ Dedup.all ++ Similarity.all ++ Multimodal.all ++
-      TrainingPipeline.all ++ graft.streaming.Streaming.all).map(tuned)
+      TrainingPipeline.all ++ graft.streaming.Streaming.all)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

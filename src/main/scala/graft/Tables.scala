@@ -10,23 +10,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * so Catalyst can push filters/projections into the parquet reader.
   */
 final class Tables(val spark: SparkSession, val dir: String) {
-  // events.parquet carries INT64 TIMESTAMP(NANOS) which Spark 4 rejects
-  // unless read as long; we convert back to a microsecond timestamp
-  // (integer division — going through double would lose precision at
-  // ~1.7e18 ns). DuckDB oracles over events must CAST(ts AS TIMESTAMP)
-  // for the same truncation.
-  spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
   def table(name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     var df = spark.read.parquet(s"$dir/$name.parquet")
     // Generations of the driver data differ in timestamp encoding:
     // events.ts has appeared as INT64 TIMESTAMP(NANOS) (read as long
-    // under nanosAsLong) and as TIMESTAMP_NTZ. Normalize both to the
-    // session-zone TIMESTAMP every operator and oracle assumes; with
-    // the UTC session zone the NTZ cast preserves the wall-clock value
-    // DuckDB reads from the same file.
+    // under the session's nanosAsLong, set by GraftConf.builder) and as
+    // TIMESTAMP_NTZ. Normalize both to the session-zone TIMESTAMP every
+    // operator and oracle assumes: nanos by integer division (going
+    // through double would lose precision at ~1.7e18 ns, and DuckDB
+    // oracles over events CAST(ts AS TIMESTAMP) for the same
+    // truncation); with the UTC session zone the NTZ cast preserves the
+    // wall-clock value DuckDB reads from the same file.
     if (name == "events" && df.schema("ts").dataType == LongType)
       df = df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     df.schema.fields.foreach { f =>
@@ -91,33 +87,5 @@ object Tables {
     if (bytes >= BigInt(maxSplit) * math.max(1, p / 2)) df
     else if (keys.isEmpty) df.repartition(p)
     else df.repartition(p, keys.map(org.apache.spark.sql.functions.col): _*)
-  }
-
-  /** Hold AQE partition coalescing off while `f` runs its jobs — for
-    * ITERATIVE loops whose per-round window/agg exchanges must keep the
-    * session shuffle width (the engine's parallelismFirst=false default
-    * coalesces a small round's exchange to one partition, serializing
-    * the rewrite work AND materializing any per-round cache one-wide —
-    * the q36 loop-pin lesson generalized). Scale-neutral: width follows
-    * spark.sql.shuffle.partitions, never a local constant. Restored in
-    * finally; only jobs RUN inside `f` (collects/checkpoints) see the
-    * override — a frame returned by `f` is planned by the caller after
-    * restore. */
-  def withCoalesceOff[T](spark: SparkSession)(f: => T): T = {
-    val k = "spark.sql.adaptive.coalescePartitions.enabled"
-    val old = spark.conf.get(k, "true")
-    spark.conf.set(k, "false")
-    try f finally spark.conf.set(k, old)
-  }
-
-  /** [[withCoalesceOff]] plus a pinned loop shuffle width (the q36
-    * loop-pin shape as a reusable guard): shuffles planned by jobs run
-    * inside `f` land at exactly `width` partitions. Both confs restored
-    * in finally; frames returned by `f` are planned after restore. */
-  def withLoopWidth[T](spark: SparkSession, width: Int)(f: => T): T = {
-    val k = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(k)
-    spark.conf.set(k, width.toString)
-    try withCoalesceOff(spark)(f) finally spark.conf.set(k, old)
   }
 }

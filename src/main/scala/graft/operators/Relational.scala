@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{GraftConf, QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** A-family: relational query core (SURVEY.md §2.A).
   *
@@ -1400,14 +1401,17 @@ object Relational {
     // hash(node, nPart) (ed's layout), so an agg exchange of the same
     // width makes the join side of every round exchange-free — ONE
     // node-table exchange per round instead of two (measured 6.3 s →
-    // 4.6 s warm at sf0.1, 20 rounds).
-    Tables.withLoopWidth(spark, nPart) {
+    // 4.6 s warm at sf0.1, 20 rounds). The rounds run on an isolated
+    // session holding that width; the final ranks are bridged back.
+    pr = GraftConf.isolated(spark, nPart, GraftConf.NoCoalescing) { loop =>
+    val edL = ColumnBridge.ofRows(loop, ed)
+    pr = ColumnBridge.ofRows(loop, pr)
     while (!converged && roundsDone < cap) {
       val prev = pr
       var cur = pr
       val n = math.min(blockRounds, cap - roundsDone)
       for (_ <- 1 to n) {
-        cur = ed.join(cur.hint("shuffle_hash"), col("src") === col("node"))
+        cur = edL.join(cur.hint("shuffle_hash"), col("src") === col("node"))
           .groupBy(col("dst"))
           .agg(sum(expr("(200 * pr + deg) div (2 * deg)")).as("s8"))
           .select(col("dst").as("node"),
@@ -1448,6 +1452,7 @@ object Relational {
       // overflow-safe for any tol and block-size-independent)
       if (delta / (math.max(1L, nn) * n) < tolPerNode) converged = true
     }
+    ColumnBridge.ofRows(spark, pr)
     }
     q36AdoptedRounds.put(dir, roundsDone)
     pr.join(d, col("node") === col("src"))

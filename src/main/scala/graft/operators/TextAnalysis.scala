@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.functions.Text
-import graft.{QueryDef, Tables}
+import graft.{GraftConf, QueryDef, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** C-family text analysis (SURVEY.md §2 t01–t04): token counting,
   * quality scoring, language ID, fingerprinting — all pure Column
@@ -278,7 +279,6 @@ object TextAnalysis {
     * Embarrassingly parallel at 100 TB: every shuffle key contains
     * doc_id, so skew is bounded by the longest single document. */
   def repetitionMetrics(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
     // the metrics only depend on each document's OWN tokens, so they
     // are computed map-side in one generated pass per row
     // ([[graft.functions.RepetitionStatsExpr]]: per-row gram count
@@ -854,11 +854,12 @@ object TextAnalysis {
     var s = docs
       .select(col("doc_id"), posexplode(Text.tokens(col("text"))))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("col").as("tok"))
-    // loop pin (r18): every round's window/agg runs inside the guard at
-    // a DATA-DERIVED width, so a small corpus is neither coalesced to
-    // one partition (the engine default would serialize each round) nor
-    // fanned out one tiny sort task per core
-    val stats = graft.Tables.withLoopWidth(spark, bpeLoopWidth(docs)) {
+    // loop pin (r18): every round's window/agg runs on an isolated
+    // session at a DATA-DERIVED width, so a small corpus is neither
+    // coalesced to one partition (the engine default would serialize
+    // each round) nor fanned out one tiny sort task per core
+    val stats = GraftConf.isolated(spark, bpeLoopWidth(docs), GraftConf.NoCoalescing) { loop =>
+      s = ColumnBridge.ofRows(loop, s)
       (1 to iters).iterator.map { k =>
       // persisted: the lead-windowed stream feeds TWO jobs per round
       // (the pair-count collect and the rewrite checkpoint) — without
@@ -1473,8 +1474,9 @@ object TextAnalysis {
         .localCheckpoint()
       val before = s.groupBy(col("doc_id")).agg(count(lit(1)).as("n_before"))
       // loop pin (r18): see bpeTrain — data-derived round width
-      graft.Tables.withLoopWidth(spark,
-        bpeLoopWidth(Tables(spark, dir).documents)) {
+      s = GraftConf.isolated(spark, bpeLoopWidth(Tables(spark, dir).documents),
+          GraftConf.NoCoalescing) { loop =>
+      s = ColumnBridge.ofRows(loop, s)
       (1 to iters).foreach { _ =>
         // persisted: the lead-windowed stream feeds both the top-pair
         // collect and the rewrite checkpoint (the t17 fix) — without
@@ -1489,6 +1491,7 @@ object TextAnalysis {
             .localCheckpoint()
         w.unpersist()
       }
+      ColumnBridge.ofRows(spark, s)
       }
       val after = s.groupBy(col("doc_id")).agg(count(lit(1)).as("n_after"))
       before.join(after, "doc_id")

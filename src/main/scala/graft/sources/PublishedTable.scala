@@ -258,18 +258,12 @@ object PublishedTable {
     }
   }
 
-  /** The catalog name [[ensureCatalog]] registers — dynamic partition
-    * overwrite is a catalog-table verb in DSv2 (`writeTo(...)
+  /** The catalog name [[graft.GraftConf.builder]] registers — dynamic
+    * partition overwrite is a catalog-table verb in DSv2 (`writeTo(...)
     * .overwritePartitions()`; the path-based DataFrameWriter maps
     * SaveMode.Overwrite to TRUNCATE), so the table is addressable as
     * `graft_published.&#96;/abs/table/path&#96;`. */
   val CatalogName = "graft_published"
-
-  def ensureCatalog(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val key = s"spark.sql.catalog.$CatalogName"
-    if (spark.conf.getOption(key).isEmpty)
-      spark.conf.set(key, classOf[PublishedCatalog].getName)
-  }
 
   /** Publish one slice through the transactional writer: per-date
     * DYNAMIC overwrite as one atomic manifest swap — the [[Jobs]]
@@ -286,10 +280,7 @@ object PublishedTable {
     if (latestManifest(path).isEmpty)
       keyed.write.format("graft.sources.PublishedTable")
         .option("path", path).mode("append").save()
-    else {
-      ensureCatalog(df.sparkSession)
-      keyed.writeTo(s"$CatalogName.`$path`").overwritePartitions()
-    }
+    else keyed.writeTo(s"$CatalogName.`$path`").overwritePartitions()
     Publish.IngestPayload(namespace, path, "parquet")
   }
 

@@ -55,7 +55,6 @@ object Streaming {
     * normalize to the session-zone TIMESTAMP, same convention as
     * [[graft.Tables]]. */
   private def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val physical = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
     // the file source wants a directory: stream the SF dir, filtered to
     // the events file
@@ -87,22 +86,17 @@ object Streaming {
     * partitions to 4 over a 2 MB source. At 100 TB rates the same
     * formula fans back out to the cluster cap.
     *
-    * The sizing lives on an ISOLATED session (`newSession`: own
-    * SQLConf, shared SparkContext/cache) and the stream is BUILT on
-    * that session inside `body` — the conf is latched from the
-    * DataFrame's own session at query start. Nothing is ever mutated
-    * on the caller's session, so concurrent batch queries can never
-    * observe the stream's partition sizing (the earlier
-    * mutate-and-restore discipline was safe serially but racy under
-    * concurrent use). A checkpoint-resumed query ignores the session
-    * value entirely (restored from checkpoint metadata). */
+    * The stream is BUILT inside `body` on a [[graft.GraftConf.isolated]]
+    * session holding that width — the conf is latched from the
+    * DataFrame's own session at query start — so concurrent batch
+    * queries on the caller's session never observe the stream's sizing.
+    * A checkpoint-resumed query ignores the session value entirely
+    * (restored from checkpoint metadata). */
   private def withStreamParallelism[T](spark: SparkSession, dir: String)(
       body: SparkSession => T): T = {
     val bytes = new java.io.File(s"$dir/events.parquet").length()
     val parts = math.max(1L,
       math.min(spark.sparkContext.defaultParallelism.toLong, bytes >> 20)).toInt
-    val isolated = spark.newSession()
-    isolated.conf.set("spark.sql.shuffle.partitions", parts.toString)
     // state-store DURABILITY rung: the default HDFSBackedStateStore
     // keeps state on the JVM heap and snapshots the FULL store at each
     // maintenance pass — fine at driver SFs, but at 100 TB ingest
@@ -115,17 +109,15 @@ object Streaming {
     // (st03/st10) must not flip providers within a staged generation —
     // their state formats differ on disk — so flip only against a
     // fresh source generation (the spec uses fresh-checkpoint queries).
-    spark.conf.getOption(StateStoreProviderConf).foreach { p =>
-      val cls = p match {
-        case "rocksdb" =>
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        case "hdfs" =>
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-        case fqcn => fqcn
-      }
-      isolated.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
+    val provider = spark.conf.getOption(StateStoreProviderConf).map {
+      case "rocksdb" =>
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+      case "hdfs" =>
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+      case fqcn => fqcn
     }
-    body(isolated)
+    graft.GraftConf.isolated(spark, parts,
+      provider.map("spark.sql.streaming.stateStore.providerClass" -> _).toSeq: _*)(body)
   }
 
   /** Session conf selecting the streaming state-store backend for

@@ -30,7 +30,6 @@ class PublishedTableSpec extends SparkSpec {
 
     // dynamic overwrite (the catalog write verb): day 2 is replaced,
     // day 1 untouched, NO duplicates
-    PublishedTable.ensureCatalog(spark)
     rows(2, Seq(20.0, 21.0))
       .writeTo(s"${PublishedTable.CatalogName}.`$path`").overwritePartitions()
     assert(readBack(path) == Seq(

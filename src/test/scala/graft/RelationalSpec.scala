@@ -688,7 +688,6 @@ class RelationalSpec extends SparkSpec {
     // t06's vocab merge — measured r18). The floor is p/8 — derived
     // from the session parallelism, never a local constant; stock
     // Spark's parallelismFirst=true floors at p itself.
-    SparkEntry.applySessionDefaults(spark)
     val p = spark.sparkContext.defaultParallelism
     val got = spark.conf.get(
       "spark.sql.adaptive.coalescePartitions.minPartitionNum").toInt

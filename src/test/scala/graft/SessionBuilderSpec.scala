@@ -8,14 +8,15 @@ import scala.jdk.CollectionConverters._
   * [[GraftConf.builder]], so the session users get is the one the
   * oracle checks and the benchmarks time. `Sf1Data` and `SkewData`
   * keep their own builders because the corpora they write (and the
-  * digests checked against them) were generated on those sessions. */
+  * digests checked against them) were generated on those sessions.
+  * GraftConf is also the only writer of a session's conf. */
 class SessionBuilderSpec extends AnyFunSuite {
 
   private val allowed = Set("GraftConf.scala", "Sf1Data.scala", "SkewData.scala")
 
   /** Source files under src/main/scala whose code (comments stripped)
-    * calls `SparkSession.builder()`. */
-  private def builderSites(): Seq[Path] = {
+    * matches `pattern`. */
+  private def sitesOf(pattern: String): Seq[Path] = {
     val root = Paths.get("src/main/scala")
     val walk = Files.walk(root)
     try walk.iterator().asScala.toSeq
@@ -24,16 +25,26 @@ class SessionBuilderSpec extends AnyFunSuite {
         val code = Files.readString(f)
           .replaceAll("(?s)/\\*.*?\\*/", "")
           .replaceAll("//[^\n]*", "")
-        code.contains("SparkSession.builder()")
+        pattern.r.findFirstIn(code).isDefined
       }
     finally walk.close()
   }
 
   test("SparkSession.builder() is called only by GraftConf, Sf1Data and SkewData") {
-    val sites = builderSites()
+    val sites = sitesOf("SparkSession\\.builder\\(\\)")
     // the scan sees code at all: GraftConf's own call is found
     assert(sites.exists(_.getFileName.toString == "GraftConf.scala"), sites)
     val stray = sites.filterNot(f => allowed(f.getFileName.toString))
     assert(stray.isEmpty, s"build the session via GraftConf.builder in: ${stray.mkString(", ")}")
+  }
+
+  test("only GraftConf writes a SparkSession's conf") {
+    // session policy is set at build time; a query that needs other
+    // values runs them on GraftConf.isolated, never on the caller's
+    // session. Hadoop Configuration writes are not session conf.
+    val sites = sitesOf("\\.conf\\s*\\.\\s*(set|unset)\\s*\\(")
+    assert(sites.exists(_.getFileName.toString == "GraftConf.scala"), sites)
+    val stray = sites.filterNot(_.getFileName.toString == "GraftConf.scala")
+    assert(stray.isEmpty, s"session conf written in: ${stray.mkString(", ")}")
   }
 }
