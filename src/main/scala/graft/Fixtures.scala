@@ -22,8 +22,12 @@ package graft
 object Fixtures {
 
   /** Repo-local root; the driver's DuckDB runs on this machine and can
-    * read_parquet these files directly. */
-  val Root = "/root/repo/target/fixtures"
+    * read_parquet these files directly. The system property
+    * `graft.fixtures.root` moves it, so two JVMs (a test run and a
+    * `Verify`, say) need not share it; by default it is `target/fixtures`
+    * under the working directory, the repo root for sbt. */
+  val Root: String = sys.props.getOrElse("graft.fixtures.root",
+    new java.io.File("target/fixtures").getAbsolutePath)
 
   /** Deterministic fixture directory for (sf dir, fixture name) — the
     * SAME formula both the writing query and the generated oracle SQL

@@ -74,7 +74,7 @@ class StateStoreSpec extends SparkSpec {
     intercept[Exception](st.state("ds"))
   }
 
-  test("watermark reads the log in one Spark job, and a missing log in none") {
+  test("watermark reads and update appends the log with no Spark job") {
     val sc = spark.sparkContext
     /** Spark jobs started by `body`, counted in their own job group;
       * a marker job after it flushes the async listener bus. */
@@ -99,12 +99,87 @@ class StateStoreSpec extends SparkSpec {
         started.get
       } finally sc.removeSparkListener(listener)
     }
-    val st = new StateStore(spark, tmpPath())
+    val path = tmpPath()
+    val st = new StateStore(spark, path)
     assert(jobsOf(assert(st.watermark("ds").isEmpty)) == 0)
+    assert(jobsOf {
+      st.update("ds", Map("last_update" -> "2024-01-01", "monthly" -> "2023-12-01"), seq = 1)
+      st.update("ds", Map("last_update" -> "2024-01-02"), seq = 2)
+      st.update("other", Map("last_update" -> "1999-01-01"), seq = 3)
+    } == 0)
+    assert(jobsOf(assert(st.watermark("ds").contains("2024-01-02"))) == 0)
+    // a new instance parses every file it lists, still on the driver
+    assert(jobsOf(assert(new StateStore(spark, path).watermark("ds").contains("2024-01-02"))) == 0)
+  }
+
+  /** A state append as Spark's writer made it: a snappy part file under
+    * the file-commit protocol. */
+  private def sparkAppend(path: String, datasetId: String, kv: Map[String, String],
+      seq: Long): Unit = {
+    import spark.implicits._
+    kv.toSeq.toDF("key", "value")
+      .select(lit(datasetId).as("dataset_id"), col("key"), col("value"), lit(seq).as("seq"))
+      .write.mode("append").parquet(path)
+  }
+
+  test("a log mixing Spark-written and driver-written files merges latest-per-key") {
+    val path = tmpPath()
+    sparkAppend(path, "ds", Map("last_update" -> "2024-01-01", "monthly" -> "2023-12-01"), 1)
+    val st = new StateStore(spark, path)
+    assert(st.state("ds") == Map("last_update" -> "2024-01-01", "monthly" -> "2023-12-01"))
+    st.update("ds", Map("last_update" -> "2024-02-01"), seq = 2)
+    // an older-format file can still carry the latest seq
+    sparkAppend(path, "ds", Map("monthly" -> "2024-01-01"), 3)
+    sparkAppend(path, "other", Map("last_update" -> "1999-01-01"), 4)
+    val want = Map("last_update" -> "2024-02-01", "monthly" -> "2024-01-01")
+    assert(st.state("ds") == want)
+    assert(new StateStore(spark, path).state("ds") == want)
+    assert(st.watermark("other").contains("1999-01-01"))
+  }
+
+  test("driver-written log files read through Spark give the same rows") {
+    val path = tmpPath()
+    val st = new StateStore(spark, path)
     st.update("ds", Map("last_update" -> "2024-01-01", "monthly" -> "2023-12-01"), seq = 1)
-    st.update("ds", Map("last_update" -> "2024-01-02"), seq = 2)
-    st.update("other", Map("last_update" -> "1999-01-01"), seq = 3)
-    // one scan: no schema inference, no emptiness probe, no shuffle
-    assert(jobsOf(assert(st.watermark("ds").contains("2024-01-02"))) == 1)
+    st.update("other", Map("last_update" -> "1999-01-01"), seq = 2)
+    val rows = spark.read.schema(StateStore.LogSchema).parquet(path).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
+    assert(rows == Set(("ds", "last_update", "2024-01-01", 1L),
+      ("ds", "monthly", "2023-12-01", 1L), ("other", "last_update", "1999-01-01", 2L)))
+  }
+
+  private def partFiles(path: String): Seq[java.io.File] =
+    new java.io.File(path).listFiles().toSeq.filter(_.getName.startsWith("part-"))
+
+  test("two instances on one log each see the other's appends and deletions") {
+    val path = tmpPath()
+    val a = new StateStore(spark, path)
+    val b = new StateStore(spark, path)
+    assert(a.watermark("ds").isEmpty && b.watermark("ds").isEmpty)
+    a.update("ds", Map("last_update" -> "2024-01-01"), seq = 1)
+    assert(b.watermark("ds").contains("2024-01-01"))
+    val before = partFiles(path)
+    b.update("ds", Map("last_update" -> "2024-01-02"), seq = 2)
+    assert(a.watermark("ds").contains("2024-01-02"))
+    // a deleted file drops out of both instances' state
+    val Seq(appended) = (partFiles(path) diff before)
+    assert(b.watermark("ds").contains("2024-01-02"))
+    assert(appended.delete())
+    assert(a.watermark("ds").contains("2024-01-01"))
+    assert(b.watermark("ds").contains("2024-01-01"))
+  }
+
+  test("a temp file left by a crash before the rename is invisible to reads") {
+    val path = tmpPath()
+    val st = new StateStore(spark, path)
+    st.update("ds", Map("last_update" -> "2024-01-01"), seq = 1)
+    // a complete append, stranded under its temp name
+    val other = tmpPath()
+    new StateStore(spark, other).update("ds", Map("last_update" -> "2024-09-09"), seq = 2)
+    val Seq(part) = partFiles(other)
+    Files.copy(part.toPath, Paths.get(path, s".tmp-${java.util.UUID.randomUUID()}.parquet"))
+    assert(st.watermark("ds").contains("2024-01-01"))
+    assert(new StateStore(spark, path).watermark("ds").contains("2024-01-01"))
+    assert(spark.read.schema(StateStore.LogSchema).parquet(path).count() == 1)
   }
 }
