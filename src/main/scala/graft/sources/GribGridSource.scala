@@ -1,12 +1,9 @@
 package graft.sources
 
 import java.util
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector over GRIB archives (GRIB2 and GRIB1,
@@ -37,17 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     skips per-point coordinate and string boxing; bitmapped-missing
   *     points are dropped (`keepMissing=true` keeps them as NULL).
   */
-class GribGridSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GribGridSource.fullSchema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val path = properties.get("path")
-    require(path != null, "GribGridSource requires option(\"path\", ...)")
-    new GribGridTable(path,
-      "true".equalsIgnoreCase(properties.getOrDefault("keepMissing", "false")))
-  }
+class GribGridSource extends GridProvider(GribGridSource.fullSchema) {
+  override protected def format(options: util.Map[String, String]): GridFormat =
+    GribFormat(required(options, "path"), flag(options, "keepMissing"))
 }
 
 object GribGridSource {
@@ -77,12 +66,9 @@ object GribGridSource {
     * the 7777 end anchored by the next message's magic or EOF — the
     * same recovery [[GribMeta.decode]] applies in-memory. Planning
     * stays O(messages), never O(bytes). */
-  def messageRanges(file: String): Seq[(Long, Long)] = {
-    val hp = new org.apache.hadoop.fs.Path(file)
-    val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val fileLen = fs.getFileStatus(hp).getLen
-    val in = fs.open(hp)
-    try {
+  def messageRanges(file: String): Seq[(Long, Long)] =
+    GridFiles.reading(file) { (in, length) =>
+      val fileLen = length()
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
       var off = 0L
       val head = new Array[Byte](16)
@@ -137,42 +123,20 @@ object GribGridSource {
       require(off == fileLen,
         s"$file: trailing ${fileLen - off} bytes after the last message")
       out.toSeq
-    } finally in.close()
-  }
+    }
 
-  private[sources] def readRange(file: String, off: Long, len: Long): Array[Byte] = {
-    val hp = new org.apache.hadoop.fs.Path(file)
-    val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val buf = new Array[Byte](len.toInt)
-    val in = fs.open(hp)
-    try in.readFully(off, buf) finally in.close()
-    buf
-  }
+  private[sources] def readRange(file: String, off: Long, len: Long): Array[Byte] =
+    GridFiles.reading(file) { (in, _) =>
+      val buf = new Array[Byte](len.toInt)
+      in.readFully(off, buf)
+      buf
+    }
 }
 
-final class GribGridTable(path: String, keepMissing: Boolean)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft_grib($path)"
-  override def schema(): StructType = GribGridSource.fullSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GribScanBuilder(path, keepMissing)
-}
-
-final class GribScanBuilder(path: String, keepMissing: Boolean)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = GribGridSource.fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new GribScan(path, required, keepMissing)
-}
-
-final class GribScan(path: String, required: StructType, keepMissing: Boolean)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
+final case class GribFormat(path: String, keepMissing: Boolean) extends GridFormat {
+  override def name: String = s"graft_grib($path)"
+  override def schema: StructType = GribGridSource.fullSchema
+  override def planSplits(filters: Seq[Filter]): Array[InputPartition] =
     GribGridSource.listFiles(path).flatMap { f =>
       if (f.endsWith(".gz"))
         // gzip is not seekable, so the per-message fan-out is
@@ -186,110 +150,69 @@ final class GribScan(path: String, required: StructType, keepMissing: Boolean)
           GribPartition(f, i, off, len): InputPartition
         }
     }.toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GribReaderFactory(required.fieldNames, keepMissing)
+
+  override def cells(split: InputPartition): GridCells = new GridCells {
+    private val p = split.asInstanceOf[GribPartition]
+    // only THIS message's byte range is read for plain archives — a
+    // 100-message archive never funnels whole-file bytes through
+    // every task. A GZ-WRAPPED archive (offset sentinel < 0)
+    // inflates whole and walks ALL its messages in this one task
+    // (gzip is not seekable — the planner's documented boundary);
+    // the LAZY iterator decodes one message's values at a time, so
+    // the task holds the inflated archive plus a single message's
+    // doubles — never every message's decoded output at once (r14
+    // advice: the eager Seq OOMed on large wrapped archives).
+    private val msgs: Iterator[(GribMeta.Message, Array[Double])] =
+      if (p.offset >= 0)
+        GribMeta.values(GribGridSource.readRange(p.file, p.offset, p.length))
+          .iterator
+      else GribMeta.valuesIterator(GridFiles.readBytes(p.file))
+    override val path: UTF8String = UTF8String.fromString(p.file)
+    // per-message fields hoisted out of the per-point loop (the r8
+    // review discipline), reloaded as the message cursor advances;
+    // the previous message's vals array is DROPPED on advance
+    private var i = -1
+    private var exhausted = false
+    private var msg: GribMeta.Message = _
+    private var vals: Array[Double] = Array.emptyDoubleArray
+    private var ni = 1
+    private var refUtf: UTF8String = _
+    private var msgIdx = 0
+    private def loadMsg(): Unit =
+      if (!msgs.hasNext) exhausted = true
+      else {
+        val (m, v) = msgs.next()
+        msg = m
+        vals = v
+        ni = if (msg.ni > 0) msg.ni else math.max(vals.length, 1)
+        refUtf = UTF8String.fromString(msg.refTime)
+        // plain splits carry the archive-walk index from the
+        // planner; a gz whole-file split reads it off each message
+        msgIdx = if (p.offset >= 0) p.msgIndex else msg.msgIndex
+        i = -1
+      }
+    loadMsg()
+
+    override def next(): Boolean = {
+      while (!exhausted) {
+        i += 1
+        if (i < vals.length) return true
+        loadMsg()
+      }
+      false
+    }
+    override def value: Double = vals(i)
+    override def column(name: String): CellSetter = name match {
+      case "msg_index" => (row, c) => row.setInt(c, msgIdx)
+      case "param_category" => (row, c) => row.setInt(c, msg.paramCategory)
+      case "param_number" => (row, c) => row.setInt(c, msg.paramNumber)
+      case "ref_time" => (row, c) => row.update(c, refUtf)
+      case "x" => (row, c) => row.setInt(c, i % ni)
+      case "y" => (row, c) => row.setInt(c, i / ni)
+      case other => unknown(other)
+    }
+  }
 }
 
 final case class GribPartition(file: String, msgIndex: Int, offset: Long,
     length: Long) extends InputPartition
-
-final class GribReaderFactory(fields: Array[String], keepMissing: Boolean)
-    extends PartitionReaderFactory {
-  // field names resolved to int codes ONCE per reader (the r8 review
-  // discipline: no string comparisons in the per-point loop)
-  private val FPath = 0; private val FMsg = 1; private val FCat = 2
-  private val FNum = 3; private val FRef = 4; private val FX = 5
-  private val FY = 6; private val FValue = 7
-  private val codes: Array[Int] = fields.map {
-    case "path" => FPath
-    case "msg_index" => FMsg
-    case "param_category" => FCat
-    case "param_number" => FNum
-    case "ref_time" => FRef
-    case "x" => FX
-    case "y" => FY
-    case "value" => FValue
-    case other => throw new IllegalArgumentException(s"unknown column $other")
-  }
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GribPartition]
-    new PartitionReader[InternalRow] {
-      // only THIS message's byte range is read for plain archives — a
-      // 100-message archive never funnels whole-file bytes through
-      // every task. A GZ-WRAPPED archive (offset sentinel < 0)
-      // inflates whole and walks ALL its messages in this one task
-      // (gzip is not seekable — the planner's documented boundary);
-      // the LAZY iterator decodes one message's values at a time, so
-      // the task holds the inflated archive plus a single message's
-      // doubles — never every message's decoded output at once (r14
-      // advice: the eager Seq OOMed on large wrapped archives).
-      private val msgs: Iterator[(GribMeta.Message, Array[Double])] =
-        if (p.offset >= 0)
-          GribMeta.values(GribGridSource.readRange(p.file, p.offset, p.length))
-            .iterator
-        else GribMeta.valuesIterator(GridFiles.readBytes(p.file))
-      private val pathUtf = UTF8String.fromString(p.file)
-      // per-message fields hoisted out of the per-point loop (the r8
-      // review discipline), reloaded as the message cursor advances;
-      // the previous message's vals array is DROPPED on advance
-      private var i = -1
-      private var exhausted = false
-      private var msg: GribMeta.Message = _
-      private var vals: Array[Double] = Array.emptyDoubleArray
-      private var ni = 1
-      private var refUtf: UTF8String = _
-      private var msgIdx = 0
-      private def loadMsg(): Unit =
-        if (!msgs.hasNext) exhausted = true
-        else {
-          val (m, v) = msgs.next()
-          msg = m
-          vals = v
-          ni = if (msg.ni > 0) msg.ni else math.max(vals.length, 1)
-          refUtf = UTF8String.fromString(msg.refTime)
-          // plain splits carry the archive-walk index from the
-          // planner; a gz whole-file split reads it off each message
-          msgIdx = if (p.offset >= 0) p.msgIndex else msg.msgIndex
-          i = -1
-        }
-      loadMsg()
-      private var current: InternalRow = _
-
-      override def next(): Boolean = {
-        while (!exhausted) {
-          i += 1
-          if (i >= vals.length) {
-            loadMsg()
-          } else {
-            val v = vals(i)
-            val missing = v.isNaN
-            if (!missing || keepMissing) {
-              val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(codes.length)
-              var c = 0
-              while (c < codes.length) {
-                codes(c) match {
-                  case FPath => row.update(c, pathUtf)
-                  case FMsg => row.setInt(c, msgIdx)
-                  case FCat => row.setInt(c, msg.paramCategory)
-                  case FNum => row.setInt(c, msg.paramNumber)
-                  case FRef => row.update(c, refUtf)
-                  case FX => row.setInt(c, i % ni)
-                  case FY => row.setInt(c, i / ni)
-                  case FValue =>
-                    if (missing) row.setNullAt(c) else row.setDouble(c, v)
-                }
-                c += 1
-              }
-              current = row
-              return true
-            }
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
-}

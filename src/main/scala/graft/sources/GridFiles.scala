@@ -1,9 +1,13 @@
 package graft.sources
 
-/** Shared Hadoop-FS plumbing for the grid DSv2 sources
-  * ([[TiffGridSource]], [[NcGridSource]]) — one place for glob
-  * semantics and byte reads, so a fix propagates to every codec
-  * connector (r9 review: the two sources had drifted copies). */
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
+
+/** Shared Hadoop-FS plumbing for the five grid DSv2 sources (Tiff, Nc,
+  * Grib, Hdf, H5; see [[GridFormat]]) — one place for glob semantics,
+  * byte reads and the bounded planning-header read, so a fix
+  * propagates to every codec connector (r9 review: the sources had
+  * drifted copies). */
 object GridFiles {
 
   /** Expand a path/glob to concrete file paths; a bare directory lists
@@ -25,13 +29,10 @@ object GridFiles {
     * [[HttpFetcher.fetchGunzippedIfChanged]] returns (which only
     * returns after the unwrap has atomically landed). */
   def list(pathOrGlob: String, exts: String*): Seq[String] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val p = new org.apache.hadoop.fs.Path(pathOrGlob)
-    val fs = p.getFileSystem(conf)
+    val (fs, p) = fileSystem(pathOrGlob)
     val expanded =
       if (fs.isDirectory(p))
-        exts.flatMap(ext => Option(
-          fs.globStatus(new org.apache.hadoop.fs.Path(p, s"*.$ext")))
+        exts.flatMap(ext => Option(fs.globStatus(new Path(p, s"*.$ext")))
           .toSeq.flatten)
       else Option(fs.globStatus(p)).toSeq.flatten
     val all = expanded.filter(_.isFile).map(_.getPath.toString).distinct
@@ -45,39 +46,63 @@ object GridFiles {
       .sorted
   }
 
+  private def fileSystem(path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(new Configuration()), p)
+  }
+
+  /** `read` over `file`'s opened stream, closed after; its second
+    * argument looks up the file's length. */
+  private[sources] def reading[A](file: String)(
+      read: (FSDataInputStream, () => Long) => A): A = {
+    val (fs, p) = fileSystem(file)
+    val in = fs.open(p)
+    try read(in, () => fs.getFileStatus(p).getLen) finally in.close()
+  }
+
   /** Whole-file bytes (codec decode is in-memory by design — grid
     * files are slice-sized, not corpus-sized). */
-  def readBytes(file: String): Array[Byte] = {
-    val hp = new org.apache.hadoop.fs.Path(file)
-    val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val in = fs.open(hp)
-    try in.readAllBytes() finally in.close()
-  }
+  def readBytes(file: String): Array[Byte] =
+    reading(file)((in, _) => in.readAllBytes())
 
   /** Last `n` bytes of the file (fewer when the file is shorter) —
     * the gzip ISIZE trailer read the gz-wrapped planning path uses. */
-  def readTail(file: String, n: Int): Array[Byte] = {
-    val hp = new org.apache.hadoop.fs.Path(file)
-    val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val len = fs.getFileStatus(hp).getLen
-    val take = math.min(len, n.toLong).toInt
-    val buf = new Array[Byte](take)
-    val in = fs.open(hp)
-    try in.readFully(len - take, buf) finally in.close()
-    buf
-  }
+  def readTail(file: String, n: Int): Array[Byte] =
+    reading(file) { (in, length) =>
+      val len = length()
+      val buf = new Array[Byte](math.min(len, n.toLong).toInt)
+      in.readFully(len - buf.length, buf)
+      buf
+    }
 
   /** First `maxLen` bytes plus the file's true length — the bounded
     * header read a planner uses instead of buffering whole cubes. */
-  def readPrefix(file: String, maxLen: Int): (Array[Byte], Long) = {
-    val hp = new org.apache.hadoop.fs.Path(file)
-    val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val len = fs.getFileStatus(hp).getLen
-    val n = math.min(len, maxLen.toLong).toInt
-    val buf = new Array[Byte](n)
-    val in = fs.open(hp)
-    try in.readFully(0L, buf) finally in.close()
-    (buf, len)
+  def readPrefix(file: String, maxLen: Int): (Array[Byte], Long) =
+    reading(file) { (in, length) =>
+      val len = length()
+      val buf = new Array[Byte](math.min(len, maxLen.toLong).toInt)
+      in.readFully(0L, buf)
+      (buf, len)
+    }
+
+  /** Planner prefix size: classic NetCDF headers, HDF4 DD blocks with
+    * SDS metadata and HDF5 superblocks with object headers are KBs in
+    * practice; 1 MB covers thousand-layer products. */
+  private[graft] val HeaderPrefixBytes = 1 << 20
+
+  /** Bounded planning-header read: `decodeHeader` gets the first
+    * [[HeaderPrefixBytes]] bytes and the file's true length, and only
+    * a file LONGER than that prefix falls back to `decode` of the
+    * whole file (its header may outrun the prefix — once per file, at
+    * plan time only); a file the prefix holds whole refuses as the
+    * prefix decode did. `prefix` is the caller's own read of it, when
+    * it holds one already. */
+  def planningHeader[A](file: String, decodeHeader: (Array[Byte], Long) => A,
+      decode: Array[Byte] => A,
+      prefix: Option[(Array[Byte], Long)] = None): A = {
+    val (head, len) = prefix.getOrElse(readPrefix(file, HeaderPrefixBytes))
+    try decodeHeader(head, len)
+    catch { case _: Exception if len > head.length => decode(readBytes(file)) }
   }
 
   /** Shared (file × layer) split planning for the layer-grouped grid

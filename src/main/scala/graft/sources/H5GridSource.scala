@@ -1,13 +1,9 @@
 package graft.sources
 
 import java.util
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, StringContains, StringEndsWith, StringStartsWith}
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector over a DIRECTORY of HDF5/netCDF-4 files —
@@ -38,18 +34,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - fill cells drop at the source (`keepFill=true` keeps them as
   *     NULL value rows); CF `_FillValue`/`scale_factor`/`add_offset`
   *     semantics ride [[Hdf5.gridCells]]. */
-class H5GridSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    H5GridSource.fullSchema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val path = properties.get("path")
-    require(path != null, "H5GridSource requires option(\"path\", ...)")
-    new H5GridTable(path, Option(properties.get("dataset")),
-      "true".equalsIgnoreCase(properties.getOrDefault("keepFill", "false")),
-      properties.getOrDefault("maxSplitsPerFile", "8").toInt)
-  }
+class H5GridSource extends GridProvider(H5GridSource.fullSchema) {
+  override protected def format(options: util.Map[String, String]): GridFormat =
+    H5Format(required(options, "path"), Option(options.get("dataset")),
+      flag(options, "keepFill"),
+      options.getOrDefault("maxSplitsPerFile", "8").toInt)
 }
 
 object H5GridSource {
@@ -62,12 +51,6 @@ object H5GridSource {
 
   def listFiles(pathOrGlob: String): Seq[String] =
     GridFiles.list(pathOrGlob, "h5", "nc", "hdf5", "nc4")
-
-  /** Planner prefix: superblock + object headers lead the file for
-    * earliest-format writers; 1 MB covers wide products. Chunk
-    * B-trees can live past it — the catch-all full read handles
-    * those files (bounded: once per file, at PLAN time only). */
-  private[graft] val HeaderPrefixBytes = 1 << 20
 
   /** Grid-readable dataset names under a selection: rank-2 only (real
     * netCDF-4 files carry 1-D dimension-scale datasets the grid path
@@ -91,23 +74,6 @@ object H5GridSource {
           (explicit && want(d.path))))
       .map(_.path).filter(want)
 
-  /** Bounded-prefix metaOnly decode with the full-read fallback — the
-    * planner's ONE per-file read discipline (metaOnly: chunk indexes,
-    * which live past the prefix in real files interleaved with data,
-    * stay unresolved — the planner only needs names and dims, and
-    * tasks re-decode fully). Shared by the names path and the
-    * external-link path; planInputPartitions memoizes it per file so
-    * an explicit scan of cross-linked granules decodes each file
-    * once. */
-  private[graft] def planningDecode(file: String): Hdf5.Hdf5File = {
-    val (prefix, len) = GridFiles.readPrefix(file, HeaderPrefixBytes)
-    try Hdf5.decode(prefix, metaOnly = true)
-    catch {
-      case _: Exception if len > prefix.length =>
-        Hdf5.decode(GridFiles.readBytes(file), metaOnly = true)
-    }
-  }
-
   /** EXTERNAL-LINK selections of an already-decoded source file:
     * `(link name, target file, target dataset)` for every external
     * link an EXPLICIT dataset option/filter names — the soft-link
@@ -128,73 +94,28 @@ object H5GridSource {
     }
 }
 
-final class H5GridTable(path: String, dataset: Option[String],
-    keepFill: Boolean, maxSplitsPerFile: Int)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft_h5($path)"
-  override def schema(): StructType = H5GridSource.fullSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new H5ScanBuilder(path, dataset, keepFill, maxSplitsPerFile)
-}
+final case class H5Format(path: String, dsOpt: Option[String],
+    keepMissing: Boolean, maxSplitsPerFile: Int) extends GridFormat {
+  override def name: String = s"graft_h5($path)"
+  override def schema: StructType = H5GridSource.fullSchema
+  override def planSplits(filters: Seq[Filter]): Array[InputPartition] =
+    plan(FileGridScan.stringPreds(filters, "path"),
+      FileGridScan.stringPreds(filters, "dataset"))
 
-final class H5ScanBuilder(path: String, dsOpt: Option[String],
-    keepFill: Boolean, maxSplitsPerFile: Int)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = H5GridSource.fullSchema
-  private var pathPreds: Seq[String => Boolean] = Nil
-  private var dsPreds: Seq[String => Boolean] = Nil
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  // split-pruning only: every filter is reported unpushed (Spark
-  // re-evaluates post-scan), the planner just skips non-matching
-  // (file × dataset) splits entirely
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("path", v: String) => pathPreds :+= ((p: String) => p == v)
-      case StringContains("path", v: String) =>
-        pathPreds :+= ((p: String) => p.contains(v))
-      case StringEndsWith("path", v: String) =>
-        pathPreds :+= ((p: String) => p.endsWith(v))
-      case StringStartsWith("path", v: String) =>
-        pathPreds :+= ((p: String) => p.startsWith(v))
-      case EqualTo("dataset", v: String) => dsPreds :+= ((s: String) => s == v)
-      case StringContains("dataset", v: String) =>
-        dsPreds :+= ((s: String) => s.contains(v))
-      case StringStartsWith("dataset", v: String) =>
-        dsPreds :+= ((s: String) => s.startsWith(v))
-      case StringEndsWith("dataset", v: String) =>
-        dsPreds :+= ((s: String) => s.endsWith(v))
-      case _ => ()
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = Array.empty
-
-  override def build(): Scan =
-    new H5Scan(path, dsOpt, required, keepFill, pathPreds, dsPreds,
-      maxSplitsPerFile)
-}
-
-final class H5Scan(path: String, dsOpt: Option[String],
-    required: StructType, keepFill: Boolean,
-    pathPreds: Seq[String => Boolean] = Nil,
-    dsPreds: Seq[String => Boolean] = Nil,
-    maxSplitsPerFile: Int = 8) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** (file × dataset) splits under function predicates — the pushed
+    * `path`/`dataset` filters, or [[H5Scan]]'s. */
+  private[sources] def plan(pathPreds: Seq[String => Boolean],
+      dsPreds: Seq[String => Boolean]): Array[InputPartition] = {
     val want: String => Boolean =
       n => dsOpt.forall(_ == n) && dsPreds.forall(_(n))
     val explicit = dsOpt.nonEmpty || dsPreds.nonEmpty
     val files = H5GridSource.listFiles(path)
     // ONE memoized planning decode per file, shared by the names path
     // and the external-link path (a master file cross-linked by many
-    // granules still decodes once). Failures memoize the CAUSE so the
+    // granules still decodes once). It is metaOnly: chunk indexes,
+    // which live past the prefix in real files interleaved with data,
+    // stay unresolved — the planner only needs names and dims, and
+    // tasks re-decode fully. Failures memoize the CAUSE so the
     // plan-time rethrow keeps the root diagnostic (r13 advice: a
     // generic 'planning decode failed' hides why a corrupt file
     // refused).
@@ -202,7 +123,9 @@ final class H5Scan(path: String, dsOpt: Option[String],
       scala.collection.mutable.HashMap.empty[String, Either[Throwable, Hdf5.Hdf5File]]
     def dec(f: String): Either[Throwable, Hdf5.Hdf5File] =
       decoded.getOrElseUpdate(f,
-        try Right(H5GridSource.planningDecode(f))
+        try Right(GridFiles.planningHeader(f,
+          (prefix, _) => Hdf5.decode(prefix, metaOnly = true),
+          Hdf5.decode(_, metaOnly = true)))
         catch { case e: Exception => Left(e) })
     val splits = GridFiles.layerSplits(files,
       f => pathPreds.forall(_(f)),
@@ -237,8 +160,59 @@ final class H5Scan(path: String, dsOpt: Option[String],
         }
     (splits ++ ext).toArray
   }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new H5ReaderFactory(required.fieldNames, dsOpt, keepFill)
+  override def cells(split: InputPartition): GridCells = new GridCells {
+    // (path label, dataset label, cell) — both partition kinds feed
+    // the same row loop
+    private val it: Iterator[(UTF8String, UTF8String, Hdf5.GridCell)] =
+      split match {
+        case p: H5Partition =>
+          val bytes = GridFiles.readBytes(p.file)
+          val f = Hdf5.decode(bytes)
+          // the fallback whole-file split reads every (option-matching)
+          // rank-2 dataset, with the planner's exact alias semantics
+          val names = p.datasets.getOrElse(
+            H5GridSource.gridNames(f, n => dsOpt.forall(_ == n), dsOpt.nonEmpty))
+          val pathUtf = UTF8String.fromString(p.file)
+          names.iterator.flatMap { n =>
+            val nUtf = UTF8String.fromString(n)
+            Hdf5.gridCells(bytes, f, n).map(c => (pathUtf, nUtf, c))
+          }
+        case pe: H5ExtPartition =>
+          // external links: ONE read+decode of the target file, rows
+          // labeled per entry with the LINKING file + link name the
+          // planner matched
+          val bytes = GridFiles.readBytes(pe.targetFile)
+          val f = Hdf5.decode(bytes)
+          pe.entries.iterator.flatMap { case (src, link, tDs) =>
+            val srcUtf = UTF8String.fromString(src)
+            val nUtf = UTF8String.fromString(link)
+            Hdf5.gridCells(bytes, f, tDs).map(c => (srcUtf, nUtf, c))
+          }
+      }
+    private var c: (UTF8String, UTF8String, Hdf5.GridCell) = _
+
+    override def next(): Boolean = it.hasNext && { c = it.next(); true }
+    override def path: UTF8String = c._1
+    override def value: Double = c._3.value
+    override def column(name: String): CellSetter = name match {
+      case "dataset" => (row, i) => row.update(i, c._2)
+      case "x" => (row, i) => row.setInt(i, c._3.x)
+      case "y" => (row, i) => row.setInt(i, c._3.y)
+      case other => unknown(other)
+    }
+  }
+}
+
+/** The shared scan with its split predicates given as functions. */
+final class H5Scan(path: String, dsOpt: Option[String],
+    required: StructType, keepFill: Boolean,
+    pathPreds: Seq[String => Boolean] = Nil,
+    dsPreds: Seq[String => Boolean] = Nil,
+    maxSplitsPerFile: Int = 8)
+    extends FileGridScan(H5Format(path, dsOpt, keepFill, maxSplitsPerFile),
+      required, Nil) {
+  override def planInputPartitions(): Array[InputPartition] =
+    H5Format(path, dsOpt, keepFill, maxSplitsPerFile).plan(pathPreds, dsPreds)
 }
 
 final case class H5Partition(file: String, datasets: Option[Seq[String]])
@@ -251,79 +225,3 @@ final case class H5Partition(file: String, datasets: Option[Seq[String]])
   * matched at planning (Spark re-checks filters post-scan). */
 final case class H5ExtPartition(targetFile: String,
     entries: Seq[(String, String, String)]) extends InputPartition
-
-final class H5ReaderFactory(fields: Array[String], dsOpt: Option[String],
-    keepFill: Boolean) extends PartitionReaderFactory {
-  // field names resolved to int codes ONCE per reader (r8 discipline:
-  // no string comparisons in the per-cell loop)
-  private val FPath = 0; private val FDs = 1; private val FX = 2
-  private val FY = 3; private val FValue = 4
-  private val codes: Array[Int] = fields.map {
-    case "path" => FPath
-    case "dataset" => FDs
-    case "x" => FX
-    case "y" => FY
-    case "value" => FValue
-    case other => throw new IllegalArgumentException(s"unknown column $other")
-  }
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    new PartitionReader[InternalRow] {
-      // (path label, dataset label, cell) — both partition kinds feed
-      // the same row loop
-      private val cells: Iterator[(UTF8String, UTF8String, Hdf5.GridCell)] =
-        partition match {
-          case p: H5Partition =>
-            val bytes = GridFiles.readBytes(p.file)
-            val f = Hdf5.decode(bytes)
-            // the fallback whole-file split reads every (option-matching)
-            // rank-2 dataset, with the planner's exact alias semantics
-            val names = p.datasets.getOrElse(
-              H5GridSource.gridNames(f, n => dsOpt.forall(_ == n), dsOpt.nonEmpty))
-            val pathUtf = UTF8String.fromString(p.file)
-            names.iterator.flatMap { n =>
-              val nUtf = UTF8String.fromString(n)
-              Hdf5.gridCells(bytes, f, n)
-                .filter(c => keepFill || !c.value.isNaN)
-                .map(c => (pathUtf, nUtf, c))
-            }
-          case pe: H5ExtPartition =>
-            // external links: ONE read+decode of the target file, rows
-            // labeled per entry with the LINKING file + link name the
-            // planner matched
-            val bytes = GridFiles.readBytes(pe.targetFile)
-            val f = Hdf5.decode(bytes)
-            pe.entries.iterator.flatMap { case (src, link, tDs) =>
-              val srcUtf = UTF8String.fromString(src)
-              val nUtf = UTF8String.fromString(link)
-              Hdf5.gridCells(bytes, f, tDs)
-                .filter(c => keepFill || !c.value.isNaN)
-                .map(c => (srcUtf, nUtf, c))
-            }
-        }
-      private var current: InternalRow = _
-
-      override def next(): Boolean = {
-        if (!cells.hasNext) return false
-        val (pathUtf, nUtf, c) = cells.next()
-        val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(codes.length)
-        var i = 0
-        while (i < codes.length) {
-          codes(i) match {
-            case FPath => row.update(i, pathUtf)
-            case FDs => row.update(i, nUtf)
-            case FX => row.setInt(i, c.x)
-            case FY => row.setInt(i, c.y)
-            case FValue =>
-              if (c.value.isNaN) row.setNullAt(i) else row.setDouble(i, c.value)
-          }
-          i += 1
-        }
-        current = row
-        true
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
-}

@@ -1,13 +1,9 @@
 package graft.sources
 
 import java.util
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, StringContains, StringEndsWith, StringStartsWith}
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector over a DIRECTORY of HDF4 tiles — the MODIS
@@ -41,18 +37,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     change, whole tiles/layers just never plan);
   *   - fill cells drop at the source (`keepFill=true` keeps them as
   *     NULL value rows). */
-class HdfGridSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    HdfGridSource.fullSchema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val path = properties.get("path")
-    require(path != null, "HdfGridSource requires option(\"path\", ...)")
-    new HdfGridTable(path, Option(properties.get("sds")),
-      "true".equalsIgnoreCase(properties.getOrDefault("keepFill", "false")),
-      properties.getOrDefault("maxSplitsPerFile", "8").toInt)
-  }
+class HdfGridSource extends GridProvider(HdfGridSource.fullSchema) {
+  override protected def format(options: util.Map[String, String]): GridFormat =
+    HdfFormat(required(options, "path"), Option(options.get("sds")),
+      flag(options, "keepFill"),
+      options.getOrDefault("maxSplitsPerFile", "8").toInt)
 }
 
 object HdfGridSource {
@@ -66,148 +55,53 @@ object HdfGridSource {
   def listFiles(pathOrGlob: String): Seq[String] =
     GridFiles.list(pathOrGlob, "hdf")
 
-  /** Planner prefix: DD blocks + SDS metadata records are header-side
-    * KBs in practice; 1 MB covers thousand-layer products. */
-  private[graft] val HeaderPrefixBytes = 1 << 20
-
-  private[graft] def planningHeader(file: String): Hdf.HdfFile = {
-    val (prefix, len) = GridFiles.readPrefix(file, HeaderPrefixBytes)
-    try Hdf.decodeHeader(prefix, len)
-    catch { case _: Exception if len > prefix.length =>
-      Hdf.decode(GridFiles.readBytes(file))
-    }
-  }
+  /** Header for planning: DD blocks + SDS metadata, never pixels. */
+  private[graft] def planningHeader(file: String): Hdf.HdfFile =
+    GridFiles.planningHeader(file, Hdf.decodeHeader, Hdf.decode)
 }
 
-final class HdfGridTable(path: String, sds: Option[String],
-    keepFill: Boolean, maxSplitsPerFile: Int)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft_hdf($path)"
-  override def schema(): StructType = HdfGridSource.fullSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new HdfScanBuilder(path, sds, keepFill, maxSplitsPerFile)
-}
-
-final class HdfScanBuilder(path: String, sdsOpt: Option[String],
-    keepFill: Boolean, maxSplitsPerFile: Int)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = HdfGridSource.fullSchema
-  private var pathPreds: Seq[String => Boolean] = Nil
-  private var sdsPreds: Seq[String => Boolean] = Nil
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  // split-pruning only: every filter is reported unpushed (Spark
-  // re-evaluates post-scan), the planner just skips non-matching
-  // (file × sds) splits entirely
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("path", v: String) => pathPreds :+= ((p: String) => p == v)
-      case StringContains("path", v: String) =>
-        pathPreds :+= ((p: String) => p.contains(v))
-      case StringEndsWith("path", v: String) =>
-        pathPreds :+= ((p: String) => p.endsWith(v))
-      case StringStartsWith("path", v: String) =>
-        pathPreds :+= ((p: String) => p.startsWith(v))
-      case EqualTo("sds", v: String) => sdsPreds :+= ((s: String) => s == v)
-      case StringContains("sds", v: String) =>
-        sdsPreds :+= ((s: String) => s.contains(v))
-      case StringStartsWith("sds", v: String) =>
-        sdsPreds :+= ((s: String) => s.startsWith(v))
-      case StringEndsWith("sds", v: String) =>
-        sdsPreds :+= ((s: String) => s.endsWith(v))
-      case _ => ()
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = Array.empty
-
-  override def build(): Scan =
-    new HdfScan(path, sdsOpt, required, keepFill, pathPreds, sdsPreds,
-      maxSplitsPerFile)
-}
-
-final class HdfScan(path: String, sdsOpt: Option[String],
-    required: StructType, keepFill: Boolean,
-    pathPreds: Seq[String => Boolean] = Nil,
-    sdsPreds: Seq[String => Boolean] = Nil,
-    maxSplitsPerFile: Int = 8) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
+final case class HdfFormat(path: String, sdsOpt: Option[String],
+    keepMissing: Boolean, maxSplitsPerFile: Int) extends GridFormat {
+  override def name: String = s"graft_hdf($path)"
+  override def schema: StructType = HdfGridSource.fullSchema
+  override def planSplits(filters: Seq[Filter]): Array[InputPartition] = {
+    val pathPreds = FileGridScan.stringPreds(filters, "path")
+    val sdsPreds = FileGridScan.stringPreds(filters, "sds")
     GridFiles.layerSplits(HdfGridSource.listFiles(path),
       f => pathPreds.forall(_(f)),
       f => HdfGridSource.planningHeader(f).sds.map(_.name),
       n => sdsOpt.forall(_ == n) && sdsPreds.forall(_(n)), maxSplitsPerFile)
       .map { case (f, group) => HdfPartition(f, group): InputPartition }
       .toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new HdfReaderFactory(required.fieldNames, sdsOpt, keepFill)
+  }
+
+  override def cells(split: InputPartition): GridCells = new GridCells {
+    private val p = split.asInstanceOf[HdfPartition]
+    private val f = Hdf.decode(GridFiles.readBytes(p.file))
+    // the fallback whole-file split reads every (option-matching) SDS
+    private val names = p.sds.getOrElse(
+      f.sds.map(_.name).filter(n => sdsOpt.forall(_ == n)))
+    override val path: UTF8String = UTF8String.fromString(p.file)
+    // external elements resolve sibling-relative to THIS tile file
+    // (the Hdf5 external-link discipline — r14); memoized so the
+    // partition's K datasets pay one read per sibling
+    private val siblings = Hdf.memoizedSiblings(p.file)
+    private val it = names.iterator.flatMap { n =>
+      val nUtf = UTF8String.fromString(n)
+      Hdf.gridCells(f, n, siblings).map(c => (nUtf, c))
+    }
+    private var c: (UTF8String, Hdf.GridCell) = _
+
+    override def next(): Boolean = it.hasNext && { c = it.next(); true }
+    override def value: Double = c._2.value
+    override def column(name: String): CellSetter = name match {
+      case "sds" => (row, i) => row.update(i, c._1)
+      case "x" => (row, i) => row.setInt(i, c._2.x)
+      case "y" => (row, i) => row.setInt(i, c._2.y)
+      case other => unknown(other)
+    }
+  }
 }
 
 final case class HdfPartition(file: String, sds: Option[Seq[String]])
     extends InputPartition
-
-final class HdfReaderFactory(fields: Array[String], sdsOpt: Option[String],
-    keepFill: Boolean) extends PartitionReaderFactory {
-  // field names resolved to int codes ONCE per reader (r8 discipline:
-  // no string comparisons in the per-cell loop)
-  private val FPath = 0; private val FSds = 1; private val FX = 2
-  private val FY = 3; private val FValue = 4
-  private val codes: Array[Int] = fields.map {
-    case "path" => FPath
-    case "sds" => FSds
-    case "x" => FX
-    case "y" => FY
-    case "value" => FValue
-    case other => throw new IllegalArgumentException(s"unknown column $other")
-  }
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[HdfPartition]
-    new PartitionReader[InternalRow] {
-      private val f = Hdf.decode(GridFiles.readBytes(p.file))
-      // the fallback whole-file split reads every (option-matching) SDS
-      private val names = p.sds.getOrElse(
-        f.sds.map(_.name).filter(n => sdsOpt.forall(_ == n)))
-      private val pathUtf = UTF8String.fromString(p.file)
-      // external elements resolve sibling-relative to THIS tile file
-      // (the Hdf5 external-link discipline — r14); memoized so the
-      // partition's K datasets pay one read per sibling
-      private val siblings = Hdf.memoizedSiblings(p.file)
-      private val cells = names.iterator.flatMap { n =>
-        val nUtf = UTF8String.fromString(n)
-        Hdf.gridCells(f, n, siblings)
-          .filter(c => keepFill || !c.value.isNaN)
-          .map(c => (nUtf, c))
-      }
-      private var current: InternalRow = _
-
-      override def next(): Boolean = {
-        if (!cells.hasNext) return false
-        val (nUtf, c) = cells.next()
-        val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(codes.length)
-        var i = 0
-        while (i < codes.length) {
-          codes(i) match {
-            case FPath => row.update(i, pathUtf)
-            case FSds => row.update(i, nUtf)
-            case FX => row.setInt(i, c.x)
-            case FY => row.setInt(i, c.y)
-            case FValue =>
-              if (c.value.isNaN) row.setNullAt(i) else row.setDouble(i, c.value)
-          }
-          i += 1
-        }
-        current = row
-        true
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
-}

@@ -1,12 +1,9 @@
 package graft.sources
 
 import java.util
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector over a DIRECTORY of NetCDF-3 files — the
@@ -36,22 +33,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *     them as NULL value rows); an empty record dim (numrecs=0) plans
   *     zero splits, matching readGrid's zero rows.
   */
-class NcGridSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    NcGridSource.fullSchema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val path = properties.get("path")
-    require(path != null, "NcGridSource requires option(\"path\", ...)")
-    val varName = properties.get("var")
-    require(varName != null, "NcGridSource requires option(\"var\", ...)")
-    val stepsPerSplit = Integer.parseInt(
-      properties.getOrDefault("stepsPerSplit", "8"))
+class NcGridSource extends GridProvider(NcGridSource.fullSchema) {
+  override protected def format(options: util.Map[String, String]): GridFormat = {
+    val path = required(options, "path")
+    val varName = required(options, "var")
+    val stepsPerSplit = Integer.parseInt(options.getOrDefault("stepsPerSplit", "8"))
     require(stepsPerSplit >= 1, s"bad stepsPerSplit $stepsPerSplit")
-    new NcGridTable(path, varName,
-      "true".equalsIgnoreCase(properties.getOrDefault("keepFill", "false")),
-      stepsPerSplit)
+    NcFormat(path, varName, flag(options, "keepFill"), stepsPerSplit)
   }
 }
 
@@ -74,9 +62,8 @@ object NcGridSource {
   def listFiles(pathOrGlob: String): Seq[String] =
     GridFiles.list(pathOrGlob, "nc", "nc.gz")
 
-  /** Planner prefix size: classic headers are dims+attrs+var metadata —
-    * KBs in practice; 1 MB covers even thousand-variable files. */
-  private[graft] val HeaderPrefixBytes = 1 << 20
+  /** Planner prefix size ([[GridFiles.HeaderPrefixBytes]]). */
+  private[graft] val HeaderPrefixBytes = GridFiles.HeaderPrefixBytes
 
   /** Time-step count of `varName` — header-only: the variable's shape
     * along its time axis; 1 when it has no time axis, and genuinely 0
@@ -89,19 +76,13 @@ object NcGridSource {
     if (tAxis < 0) 1 else f.shapeOf(v)(tAxis)
   }
 
-  /** Max DEFLATE expansion (one bit can encode a 258-byte match →
-    * ×1032): an ISIZE trailer claiming more than this per compressed
-    * byte cannot belong to the stream's only member — the file is
-    * multi-member or crafted, so planning must not trust it. */
-  private[graft] val MaxDeflateRatio = Gz.MaxDeflateRatio
-
   /** Header for planning: bounded prefix read first (the driver must
     * never buffer whole cubes — r9 review), whole-file fallback only
     * when the header genuinely outruns the prefix. Gz-wrapped files
     * keep the bound: a bounded OUTPUT prefix inflates from the bounded
     * INPUT prefix, and the true uncompressed length comes from the
     * gzip ISIZE trailer — validated BOTH ways (≥ the inflated prefix
-    * AND ≤ [[MaxDeflateRatio]] × the compressed length: a multi-member
+    * AND ≤ [[Gz.MaxDeflateRatio]] × the compressed length: a multi-member
     * or crafted stream's trailer covers only the LAST member mod 2^32,
     * so an unbounded check could bless a wildly overstated file length
     * — r14 advice). Anything inconsistent falls back to the whole-file
@@ -142,8 +123,8 @@ object NcGridSource {
           val isz = Gz.isize(GridFiles.readTail(file, 4))
           require(isz >= inflated.length,
             s"gzip ISIZE $isz inconsistent with the inflated prefix")
-          require(isz <= len * MaxDeflateRatio,
-            s"gzip ISIZE $isz exceeds ${MaxDeflateRatio}x the compressed " +
+          require(isz <= len * Gz.MaxDeflateRatio,
+            s"gzip ISIZE $isz exceeds ${Gz.MaxDeflateRatio}x the compressed " +
               s"length $len — multi-member or crafted trailer")
           NetCdf.decodeHeader(inflated, isz)
         } catch { case _: Exception =>
@@ -151,86 +132,38 @@ object NcGridSource {
         }
       }
       }
-    } else {
-      try NetCdf.decodeHeader(prefix, len)
-      catch { case _: Exception if len > prefix.length =>
-        NetCdf.decode(GridFiles.readBytes(file))
-      }
-    }
+    } else
+      GridFiles.planningHeader(file, NetCdf.decodeHeader, NetCdf.decode,
+        Some((prefix, len)))
   }
 }
 
-final class NcGridTable(path: String, varName: String, keepFill: Boolean,
-    stepsPerSplit: Int) extends Table with SupportsRead {
-  override def name(): String = s"graft_nc($path, $varName)"
-  override def schema(): StructType = NcGridSource.fullSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NcScanBuilder(path, varName, keepFill, stepsPerSplit)
-}
+final case class NcFormat(path: String, varName: String, keepMissing: Boolean,
+    stepsPerSplit: Int) extends GridFormat {
+  override def name: String = s"graft_nc($path, $varName)"
+  override def schema: StructType = NcGridSource.fullSchema
 
-final class NcScanBuilder(path: String, varName: String, keepFill: Boolean,
-    stepsPerSplit: Int)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = NcGridSource.fullSchema
-  private var tBounds: (Int, Int) = (0, Int.MaxValue)
-  private var pathPreds: Seq[String => Boolean] = Nil
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** SPLIT pruning, not row filtering: bounds on `t` and decidable
-    * `path` predicates skip whole (file × step-range) splits at
-    * planning — a one-date query over a year archive plans one slice,
-    * not 365 tasks that each filter everything out. Every filter is
-    * reported UNPUSHED (returned verbatim, [[pushedFilters]] empty),
-    * so Spark still evaluates them post-scan and pruning can only
-    * ever remove splits that cannot produce a matching row. */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.sources._
-    filters.foreach {
-      case EqualTo("t", v: Int) =>
-        tBounds = (math.max(tBounds._1, v), math.min(tBounds._2, v))
-      case GreaterThan("t", v: Int) =>
-        tBounds = (math.max(tBounds._1, v + 1), tBounds._2)
-      case GreaterThanOrEqual("t", v: Int) =>
-        tBounds = (math.max(tBounds._1, v), tBounds._2)
-      case LessThan("t", v: Int) =>
-        tBounds = (tBounds._1, math.min(tBounds._2, v - 1))
-      case LessThanOrEqual("t", v: Int) =>
-        tBounds = (tBounds._1, math.min(tBounds._2, v))
-      case In("t", vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Int]) =>
+  /** Bounds on `t` from the pushed filters, for split pruning. */
+  private def tBounds(filters: Seq[Filter]): (Int, Int) =
+    filters.foldLeft((0, Int.MaxValue)) {
+      case ((lo, hi), EqualTo("t", v: Int)) => (math.max(lo, v), math.min(hi, v))
+      case ((lo, hi), GreaterThan("t", v: Int)) => (math.max(lo, v + 1), hi)
+      case ((lo, hi), GreaterThanOrEqual("t", v: Int)) => (math.max(lo, v), hi)
+      case ((lo, hi), LessThan("t", v: Int)) => (lo, math.min(hi, v - 1))
+      case ((lo, hi), LessThanOrEqual("t", v: Int)) => (lo, math.min(hi, v))
+      case ((lo, hi), In("t", vs)) if vs.nonEmpty && vs.forall(_.isInstanceOf[Int]) =>
         val ts = vs.map(_.asInstanceOf[Int])
-        tBounds = (math.max(tBounds._1, ts.min), math.min(tBounds._2, ts.max))
-      case EqualTo("path", v: String) => pathPreds :+= ((p: String) => p == v)
-      case StringContains("path", v: String) =>
-        pathPreds :+= ((p: String) => p.contains(v))
-      case StringEndsWith("path", v: String) =>
-        pathPreds :+= ((p: String) => p.endsWith(v))
-      case StringStartsWith("path", v: String) =>
-        pathPreds :+= ((p: String) => p.startsWith(v))
-      case _ => () // not prunable; evaluated post-scan like the rest
+        (math.max(lo, ts.min), math.min(hi, ts.max))
+      case (bounds, _) => bounds
     }
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-    Array.empty
 
-  override def build(): Scan =
-    new NcScan(path, varName, required, keepFill, stepsPerSplit,
-      tBounds, pathPreds)
-}
-
-final class NcScan(path: String, varName: String, required: StructType,
-    keepFill: Boolean, stepsPerSplit: Int,
-    tBounds: (Int, Int) = (0, Int.MaxValue),
-    pathPreds: Seq[String => Boolean] = Nil) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
+  /** SPLIT pruning: bounds on `t` and decidable `path` predicates skip
+    * whole (file × step-range) splits at planning — a one-date query
+    * over a year archive plans one slice, not 365 tasks that each
+    * filter everything out. */
+  override def planSplits(filters: Seq[Filter]): Array[InputPartition] = {
+    val (tLo, tHi) = tBounds(filters)
+    val pathPreds = FileGridScan.stringPreds(filters, "path")
     // split = (file × step RANGE): a 121-step cube fans out across
     // ceil(121/stepsPerSplit) tasks, each reading the file ONCE and
     // decoding only its slices — per-step splits would multiply the
@@ -257,8 +190,8 @@ final class NcScan(path: String, varName: String, required: StructType,
             // (pushedFilters() is empty), so results stay correct.
             Seq(NcPartition(f, 0, Int.MaxValue): InputPartition)
           case Some(steps) =>
-            val lo = math.max(0, tBounds._1)
-            val hi = math.min(steps - 1, tBounds._2)
+            val lo = math.max(0, tLo)
+            val hi = math.min(steps - 1, tHi)
             (0 until steps by stepsPerSplit)
               .map(t0 => (t0, math.min(t0 + stepsPerSplit, steps)))
               .filter { case (t0, t1) => t0 <= hi && t1 - 1 >= lo }
@@ -267,77 +200,39 @@ final class NcScan(path: String, varName: String, required: StructType,
               }
         }
       }.toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new NcReaderFactory(required.fieldNames, varName, keepFill)
+  }
+
+  override def cells(split: InputPartition): GridCells = new GridCells {
+    private val p = split.asInstanceOf[NcPartition]
+    // the file is read ONCE per task; only this split's time slices
+    // decode (random-access slabs), not the whole cube
+    private val nc = NetCdf.decode(GridFiles.readBytes(p.file))
+    // clamp the unknown-steps sentinel split (planner fallback) to
+    // the file's true step count; normal splits are already in range
+    private val tEnd = math.min(p.tEnd, NcGridSource.timeSteps(nc, varName))
+    private val it = Iterator.range(p.tStart, tEnd)
+      .flatMap(t => NetCdf.gridCells(nc, varName, onlyT = Some(t)))
+    override val path: UTF8String = UTF8String.fromString(p.file)
+    private val varUtf = UTF8String.fromString(varName)
+    private var c: NetCdf.GridCell = _
+
+    override def next(): Boolean = it.hasNext && { c = it.next(); true }
+    override def value: Double = c.value
+    override def column(name: String): CellSetter = name match {
+      case "var" => (row, i) => row.update(i, varUtf)
+      case "t" => (row, i) => row.setInt(i, c.t)
+      case "time" => (row, i) => c.timeMicros match {
+        case Some(m) => row.setLong(i, m)
+        case None => row.setNullAt(i)
+      }
+      case "x" => (row, i) => row.setInt(i, c.x)
+      case "y" => (row, i) => row.setInt(i, c.y)
+      case "lon" => (row, i) => row.setDouble(i, c.lon)
+      case "lat" => (row, i) => row.setDouble(i, c.lat)
+      case other => unknown(other)
+    }
+  }
 }
 
 final case class NcPartition(file: String, tStart: Int, tEnd: Int)
     extends InputPartition
-
-final class NcReaderFactory(fields: Array[String], varName: String,
-    keepFill: Boolean) extends PartitionReaderFactory {
-  // field names resolved to int codes ONCE per reader (the r8 review
-  // discipline: no string comparisons in the per-cell loop)
-  private val FPath = 0; private val FVar = 1; private val FT = 2
-  private val FTime = 3; private val FX = 4; private val FY = 5
-  private val FLon = 6; private val FLat = 7; private val FValue = 8
-  private val codes: Array[Int] = fields.map {
-    case "path" => FPath
-    case "var" => FVar
-    case "t" => FT
-    case "time" => FTime
-    case "x" => FX
-    case "y" => FY
-    case "lon" => FLon
-    case "lat" => FLat
-    case "value" => FValue
-    case other => throw new IllegalArgumentException(s"unknown column $other")
-  }
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[NcPartition]
-    new PartitionReader[InternalRow] {
-      // the file is read ONCE per task; only this split's time slices
-      // decode (random-access slabs), not the whole cube
-      private val nc = NetCdf.decode(GridFiles.readBytes(p.file))
-      // clamp the unknown-steps sentinel split (planner fallback) to
-      // the file's true step count; normal splits are already in range
-      private val tEnd = math.min(p.tEnd, NcGridSource.timeSteps(nc, varName))
-      private val cells = Iterator.range(p.tStart, tEnd)
-        .flatMap(t => NetCdf.gridCells(nc, varName, onlyT = Some(t)))
-        .filter(c => keepFill || !c.value.isNaN)
-      private val pathUtf = UTF8String.fromString(p.file)
-      private val varUtf = UTF8String.fromString(varName)
-      private var current: InternalRow = _
-
-      override def next(): Boolean = {
-        if (!cells.hasNext) return false
-        val c = cells.next()
-        val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(codes.length)
-        var i = 0
-        while (i < codes.length) {
-          codes(i) match {
-            case FPath => row.update(i, pathUtf)
-            case FVar => row.update(i, varUtf)
-            case FT => row.setInt(i, c.t)
-            case FTime => c.timeMicros match {
-              case Some(m) => row.setLong(i, m)
-              case None => row.setNullAt(i)
-            }
-            case FX => row.setInt(i, c.x)
-            case FY => row.setInt(i, c.y)
-            case FLon => row.setDouble(i, c.lon)
-            case FLat => row.setDouble(i, c.lat)
-            case FValue =>
-              if (c.value.isNaN) row.setNullAt(i) else row.setDouble(i, c.value)
-          }
-          i += 1
-        }
-        current = row
-        true
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
-}

@@ -1,12 +1,9 @@
 package graft.sources
 
 import java.util
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector over a DIRECTORY of GeoTIFFs — the raster
@@ -30,17 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - nodata pixels are dropped at the source (option
   *     `keepNodata=true` keeps them as NULL value rows) — the decode
   *     stays task-side, the driver only lists files. */
-class TiffGridSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TiffGridSource.fullSchema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val path = properties.get("path")
-    require(path != null, "TiffGridSource requires option(\"path\", ...)")
-    new TiffGridTable(path,
-      "true".equalsIgnoreCase(properties.getOrDefault("keepNodata", "false")))
-  }
+class TiffGridSource extends GridProvider(TiffGridSource.fullSchema) {
+  override protected def format(options: util.Map[String, String]): GridFormat =
+    TiffFormat(required(options, "path"), flag(options, "keepNodata"))
 }
 
 object TiffGridSource {
@@ -60,93 +49,36 @@ object TiffGridSource {
     GridFiles.list(pathOrGlob, "tif", "tif.gz")
 }
 
-final class TiffGridTable(path: String, keepNodata: Boolean)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft_tiff($path)"
-  override def schema(): StructType = TiffGridSource.fullSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TiffScanBuilder(path, keepNodata)
-}
-
-final class TiffScanBuilder(path: String, keepNodata: Boolean)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = TiffGridSource.fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new TiffScan(path, required, keepNodata)
-}
-
-final class TiffScan(path: String, required: StructType, keepNodata: Boolean)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
+final case class TiffFormat(path: String, keepMissing: Boolean) extends GridFormat {
+  override def name: String = s"graft_tiff($path)"
+  override def schema: StructType = TiffGridSource.fullSchema
+  override def planSplits(filters: Seq[Filter]): Array[InputPartition] =
     TiffGridSource.listFiles(path).map(TiffPartition(_): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TiffReaderFactory(required.fieldNames, keepNodata)
-}
 
-final case class TiffPartition(file: String) extends InputPartition
+  override def cells(split: InputPartition): GridCells = new GridCells {
+    private val file = split.asInstanceOf[TiffPartition].file
+    private val r = GeoTiff.decode(GridFiles.readBytes(file))
+    override val path: UTF8String = UTF8String.fromString(file)
+    private var x = -1
+    private var y = 0
+    private var v = 0.0
 
-final class TiffReaderFactory(fields: Array[String], keepNodata: Boolean)
-    extends PartitionReaderFactory {
-  // field names resolved to int codes ONCE per reader — the per-pixel
-  // loop must not do string comparisons (review finding r8)
-  private val FPath = 0; private val FX = 1; private val FY = 2
-  private val FLon = 3; private val FLat = 4; private val FValue = 5
-  private val codes: Array[Int] = fields.map {
-    case "path" => FPath
-    case "x" => FX
-    case "y" => FY
-    case "lon" => FLon
-    case "lat" => FLat
-    case "value" => FValue
-    case other => throw new IllegalArgumentException(s"unknown column $other")
-  }
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[TiffPartition].file
-    new PartitionReader[InternalRow] {
-      private val r = GeoTiff.decode(GridFiles.readBytes(file))
-      private val pathUtf = UTF8String.fromString(file)
-      private var x = -1
-      private var y = 0
-      private var current: InternalRow = _
-
-      override def next(): Boolean = {
-        while (true) {
-          x += 1
-          if (x == r.width) { x = 0; y += 1 }
-          if (y >= r.height) return false
-          val v = r.value(x, y)
-          val isNd = r.isNodata(v)
-          if (!isNd || keepNodata) {
-            // build ONLY the pruned columns — a value-only projection
-            // never computes per-pixel georeferencing
-            val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(codes.length)
-            var i = 0
-            while (i < codes.length) {
-              codes(i) match {
-                case FPath => row.update(i, pathUtf)
-                case FX => row.setInt(i, x)
-                case FY => row.setInt(i, y)
-                case FLon => row.setDouble(i, r.lonOf(x))
-                case FLat => row.setDouble(i, r.latOf(y))
-                case FValue =>
-                  if (isNd) row.setNullAt(i) else row.setDouble(i, v)
-              }
-              i += 1
-            }
-            current = row
-            return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
+    override def next(): Boolean = {
+      x += 1
+      if (x == r.width) { x = 0; y += 1 }
+      y < r.height && { v = r.value(x, y); true }
+    }
+    override def value: Double = v
+    override def missing: Boolean = r.isNodata(v)
+    // a value-only projection never computes per-pixel georeferencing
+    override def column(name: String): CellSetter = name match {
+      case "x" => (row, i) => row.setInt(i, x)
+      case "y" => (row, i) => row.setInt(i, y)
+      case "lon" => (row, i) => row.setDouble(i, r.lonOf(x))
+      case "lat" => (row, i) => row.setDouble(i, r.latOf(y))
+      case other => unknown(other)
     }
   }
 }
+
+final case class TiffPartition(file: String) extends InputPartition

@@ -255,6 +255,15 @@ class GeoTiffSpec extends SparkSpec {
       .linesIterator.find(_.contains("BatchScan")).getOrElse("")
     assert(scanLine.matches(".*BatchScan[^\\[]*\\[value#\\d+\\].*"), scanLine)
     assert(pruned.agg(round(sum("value"), 2)).collect()(0).getDouble(0) == 23.0)
+    // a projection in another order than the schema's, path and value
+    // included, reads the same cells as the full rows — nodata kept
+    // as NULL value or dropped
+    for (keep <- Seq(false, true)) {
+      val got = GridProjection.check(spark.read.format("graft.sources.TiffGridSource")
+        .option("path", dir).option("keepNodata", keep.toString).load(),
+        Seq("value", "lat", "path", "x"))
+      assert(got.length == (if (keep) 6 else 5) && got.exists(_.head == null) == keep)
+    }
     // keepNodata surfaces the hole as a NULL-value row
     val withNd = spark.read.format("graft.sources.TiffGridSource")
       .option("path", s"$dir/a.tif").option("keepNodata", "true").load()

@@ -919,6 +919,15 @@ class GribMetaSpec extends SparkSpec {
       .linesIterator.find(_.contains("BatchScan")).getOrElse("")
     assert(scanLine.matches(".*BatchScan[^\\[]*\\[value#\\d+\\].*"), scanLine)
     // keepMissing surfaces bitmapped holes as NULL rows
+    // a projection in another order than the schema's, path and value
+    // included, reads the same points as the full rows — bitmapped
+    // holes kept as NULL value or dropped
+    for (keep <- Seq(false, true)) {
+      val got = GridProjection.check(spark.read.format("graft.sources.GribGridSource")
+        .option("path", dir).option("keepMissing", keep.toString).load(),
+        Seq("ref_time", "value", "y", "path", "msg_index"))
+      assert(got.length == (if (keep) 12 else 10) && got.exists(_(1) == null) == keep)
+    }
     val withMissing = spark.read.format("graft.sources.GribGridSource")
       .option("path", s"$dir/b.grib2").option("keepMissing", "true").load()
     assert(withMissing.count() == 4 &&

@@ -2008,6 +2008,15 @@ class Hdf5Spec extends SparkSpec {
       .option("keepFill", "true").load()
     assert(withFill.count() == 6 &&
       withFill.filter(col("value").isNull).count() == 1)
+    // a projection in another order than the schema's, path and value
+    // included, reads the same cells as the full rows — fills kept as
+    // NULL value or dropped
+    for (keep <- Seq(false, true)) {
+      val got = GridProjection.check(spark.read.format("graft.sources.H5GridSource")
+        .option("path", dir).option("keepFill", keep.toString).load(),
+        Seq("value", "dataset", "path", "x"))
+      assert(got.length == (if (keep) 24 else 22) && got.exists(_.head == null) == keep)
+    }
     // wide file: 10 datasets group under maxSplitsPerFile
     val wideDir = java.nio.file.Files.createTempDirectory("graft_h5wide").toString
     val wide = Hdf5.encode((0 until 10).map(i =>

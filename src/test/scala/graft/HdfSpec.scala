@@ -650,6 +650,15 @@ class HdfSpec extends SparkSpec {
       .option("keepFill", "true").load()
     assert(withFill.count() == 6 &&
       withFill.filter(col("value").isNull).count() == 1)
+    // a projection in another order than the schema's, path and value
+    // included, reads the same cells as the full rows — fills kept as
+    // NULL value or dropped
+    for (keep <- Seq(false, true)) {
+      val got = GridProjection.check(spark.read.format("graft.sources.HdfGridSource")
+        .option("path", dir).option("keepFill", keep.toString).load(),
+        Seq("value", "sds", "path", "y"))
+      assert(got.length == (if (keep) 24 else 22) && got.exists(_.head == null) == keep)
+    }
     // planner reads a bounded header prefix, never pixels
     val hdr = graft.sources.HdfGridSource.planningHeader(s"$dir/a.hdf")
     assert(hdr.sds.map(_.name) == Seq("ndvi", "qa"))

@@ -709,6 +709,16 @@ class NetCdfSpec extends SparkSpec {
     val scanLine = pruned.queryExecution.executedPlan.toString
       .linesIterator.find(_.contains("BatchScan")).getOrElse("")
     assert(scanLine.matches(".*BatchScan[^\\[]*\\[value#\\d+\\].*"), scanLine)
+    // a projection in another order than the schema's, path and value
+    // included, reads the same cells as the full rows — fills kept as
+    // NULL value or dropped
+    for (keep <- Seq(false, true)) {
+      val got = GridProjection.check(spark.read.format("graft.sources.NcGridSource")
+        .option("path", dir).option("var", "rfe")
+        .option("keepFill", keep.toString).load(),
+        Seq("time", "value", "path", "lon", "t"))
+      assert(got.length == (if (keep) 16 else 15) && got.exists(_(1) == null) == keep)
+    }
     // keepFill surfaces fills as NULL rows
     val withFill = spark.read.format("graft.sources.NcGridSource")
       .option("path", s"$dir/a.nc").option("var", "rfe")
