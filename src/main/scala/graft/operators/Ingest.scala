@@ -3272,19 +3272,21 @@ object Ingest {
     * 12-15) — slices 0-6 landed as one concatenated MIXED-EDITION
     * archive and slice 7 GZIP-WRAPPED (`.grib.gz`, the historical
     * NCEP/CPC distribution shape — r14; t rides param_number since
-    * msg_index is per-file), decoded back task-side by
-    * [[graft.sources.GribMeta.readValues]], and hash-checked against
-    * DuckDB recomputing the grid directly — bit-slips anywhere in the
-    * section walk, bitmap masking, (R + X·2^E) unpacking,
-    * group/differencing reconstruction, PNG pixel walk, the EBCOT/DWT
-    * pipeline, the Rice coder, the edition-1 BDS walk, or the
+    * msg_index is per-file), decoded back task-side through the
+    * [[graft.sources.GribGridSource]] DSv2 scan (per-message splits for
+    * the archive, one whole-file split for the `.grib.gz`), and
+    * hash-checked against DuckDB recomputing the grid directly —
+    * bit-slips anywhere in the section walk, bitmap masking,
+    * (R + X·2^E) unpacking, group/differencing reconstruction, PNG
+    * pixel walk, the EBCOT/DWT pipeline, the Rice coder, the
+    * edition-1 BDS walk, the per-message split planner, or the
     * §5-riding (0,0) coefficient break the hash (2^-2 and the integer
     * codes are exact in binary, so no rounding is needed on either
     * side).
     *
     * Scale shape: identical to i62 — fixed 8×(8×12) grid, one
     * 768-group partial-agg shuffle, model-state-bounded driver encode,
-    * per-archive-file task fan-out on the read. */
+    * per-message task fan-out on the read. */
   def i63: QueryDef = QueryDef(
     "i63_grib_cycle",
     """WITH g AS (
@@ -3407,7 +3409,8 @@ object Ingest {
       msgs.take(7).reduce(_ ++ _))
     java.nio.file.Files.write(gribDir.resolve("slice7.grib.gz"),
       graft.sources.Gz.gzip(msgs(7)))
-    GribMeta.readValues(spark, gribDir.toString)
+    spark.read.format("graft.sources.GribGridSource")
+      .option("path", gribDir.toString).load()
       .select(col("param_number").as("t"), col("x"), col("y"), col("value"))
       .orderBy(col("t"), col("y"), col("x"))
   }
@@ -3616,8 +3619,8 @@ object Ingest {
       }.toSeq))
     // read back through the H5GridSource DSv2 connector (r11): one
     // scan plans per-(file × dataset) splits and the t key recovers
-    // from the dataset name — the same cells readGrid yields, but
-    // through the pruned, column-projected scale path
+    // from the dataset name — the cells Hdf5.gridCells yields, through
+    // the pruned, column-projected scale path
     spark.read.format("graft.sources.H5GridSource")
       .option("path", h5Dir.toString).load()
       .select(regexp_extract(col("dataset"), "q(\\d+)", 1).cast("int").as("t"),
@@ -3633,7 +3636,7 @@ object Ingest {
     * shuffle→deflate→fletcher32 (`nc_def_var_deflate`'s exact
     * emission, checksums REAL) via [[graft.sources.Hdf5.encode]],
     * indexed by a type-1 chunk B-tree, read back task-side by
-    * [[graft.sources.Hdf5.readGrid]] undoing the pipeline in reverse
+    * [[graft.sources.H5GridSource]] undoing the pipeline in reverse
     * per chunk with CF semantics applied (fill dropped,
     * raw·0.5 − 500); DuckDB recomputes grid + transform directly — a
     * bit-slip in the B-tree walk, chunk scatter, shuffle transpose,
@@ -3670,7 +3673,9 @@ object Ingest {
         attrs = Seq("scale_factor" -> 0.5, "add_offset" -> -500.0),
         chunk = Some(Seq(5, 5)),
         filters = Seq("shuffle", "deflate", "fletcher32")))))
-    Hdf5.readGrid(spark, h5Dir.resolve("chunked.h5").toString, "/q")
+    spark.read.format("graft.sources.H5GridSource")
+      .option("path", h5Dir.resolve("chunked.h5").toString)
+      .option("dataset", "/q").load()
       .select(col("x"), col("y"), col("value"))
       .orderBy(col("y"), col("x"))
   }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Minimal clean-room GeoTIFF codec — the binary-raster decode rung
@@ -25,11 +25,10 @@ import org.apache.spark.sql.functions._
   *     with the same geo tags; driver-bounded [[publishTif]] or
   *     task-side [[publishTifTasks]] for grids past the driver budget.
   *
-  * Scale shape: decode is DATA-PLANE work — [[readRaster]] runs it
-  * inside mapPartitions over Spark's `binaryFile` source (one task per
-  * file, the multimodal-payload discipline of m01–m11), so a
-  * 100 TB raster archive decodes with cluster parallelism and the
-  * driver never touches pixel bytes. One row per valid pixel
+  * Scale shape: decode is DATA-PLANE work — [[TiffGridSource]] runs
+  * it inside each scan task (one task per file, the multimodal-payload
+  * discipline of m01–m11), so a 100 TB raster archive decodes with
+  * cluster parallelism and the driver never touches pixel bytes. One row per valid pixel
   * (nodata → dropped or kept null by flag), georeferenced to
   * (lon, lat) at the pixel CENTER (the gdal convention for area
   * rasters: tiepoint maps the OUTER corner of pixel (0,0)). */
@@ -684,34 +683,6 @@ object GeoTiff {
     nodataAscii.foreach(s => out.put(s.getBytes("US-ASCII")))
     out.put(pixelData)
     out.array()
-  }
-
-  /** Distributed raster→rows decode: every file matching `path`
-    * (Spark binaryFile glob) decodes INSIDE its task and emits one row
-    * per pixel — `(path, x, y, lon, lat, value)`, nodata pixels
-    * dropped (`keepNodata = true` keeps them with value NULL). The
-    * driver never sees pixel bytes; a raster archive decodes with full
-    * cluster parallelism and downstream grid operators (i27 coarsen,
-    * i28 focal, i30 zonal, i11 contours) consume the rows directly. */
-  def readRaster(spark: SparkSession, path: String,
-      keepNodata: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-    files.mapPartitions { it =>
-      it.flatMap { case (p, bytes) =>
-        val r = decode(bytes)
-        for {
-          y <- Iterator.range(0, r.height)
-          x <- Iterator.range(0, r.width)
-          v = r.value(x, y)
-          isNd = r.isNodata(v)
-          if keepNodata || !isNd
-        } yield (p, x, y, r.lonOf(x), r.latOf(y),
-          if (isNd) None else Some(v))
-      }
-    }.toDF("path", "x", "y", "lon", "lat", "value")
   }
 
   /** Publish one grid DataFrame (x, y, value columns over a dense

@@ -27,9 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     so planning cost is O(messages), not O(bytes);
   *   - each TASK positioned-reads ONLY its own message's byte range
   *     and decodes it with [[GribMeta.values]] — every packing that
-  *     engine decodes (GRIB2 5.0/5.2/5.3/5.40/5.41/5.42 and GRIB1
-  *     simple packing); anything else fails the task loudly per the
-  *     codec-gate discipline;
+  *     engine decodes (GRIB2 5.0/5.2/5.3/5.40/5.41/5.42/5.50 and GRIB1
+  *     simple, second-order and spectral packing); anything else fails
+  *     the task loudly per the codec-gate discipline;
   *   - SupportsPushDownRequiredColumns: a `value`-only projection
   *     skips per-point coordinate and string boxing; bitmapped-missing
   *     points are dropped (`keepMissing=true` keeps them as NULL).

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** GRIB message-level METADATA scanner — the cataloging half of the
+/** GRIB codec: message-level METADATA scanner and PIXEL decode — the
   * reference's GRIB ingestion (`ecmwf_opendata/__init__.py` slices a
   * downloaded GRIB by variable/time/level before any pixel work; an
   * archive inventory needs exactly the per-message header fields, not
@@ -25,11 +25,11 @@ import org.apache.spark.sql.functions._
   *     truncation — an inventory that silently drops tail messages
   *     undercounts an archive.
   *
-  * PIXEL DECODE stays out of scope by design (GRIB2 payloads are
-  * simple/complex/JPEG2000-packed; the engine's raster path is the
-  * [[GeoTiff]] codec the reference itself publishes into). Scale
-  * shape: [[scan]] runs the walk task-side over binaryFile — one task
-  * per archive file, the driver never touches message bytes. */
+  * PIXEL DECODE ([[values]]/[[valuesIterator]]) unpacks every packing
+  * listed there into grid-ordered values. Scale shape: [[scan]] runs
+  * the walk task-side over binaryFile — one task per archive file —
+  * and [[GribGridSource]] decodes values inside its scan tasks, so the
+  * driver never touches message bytes. */
 object GribMeta {
 
   final case class Message(
@@ -60,10 +60,10 @@ object GribMeta {
   private def s16(v: Int): Int =
     if ((v & 0x8000) != 0) -(v & 0x7fff) else v
 
-  /** GRIB2 payload-decode handle captured during the section walk:
-    * template 5.0 parameters + section 6/7 locations. `values` turns
-    * it into pixels; anything but simple packing stays None and
-    * [[values]] refuses loudly. */
+  /** Payload-decode handle captured during the section walk: the
+    * packing template (GRIB1: the BDS flag nibble), its parameters and
+    * the section 6/7 locations. [[values]] turns it into pixels; a
+    * message without a data section stays None and refuses by name. */
   private final case class Pack(
       template: Int, nPacked: Long, refValue: Double, binScale: Int,
       decScale: Int, nBits: Int, bitmapIndicator: Int, bitmapOff: Int,
@@ -937,37 +937,26 @@ object GribMeta {
       b.array())
   }
 
-  /** SIMPLE-PACKING pixel decode for BOTH editions — the clean-room
-    * rung that makes the ECMWF open-data path decode-complete for the
-    * common case (`ecmwf_opendata/__init__.py:300` slices GRIB by
-    * variable/time/level; open-data GRIB2 is simple-packed): each
-    * value is an `nBits`-wide big-endian field X with
-    * Y = (R + X·2^E) / 10^D (regulation 92.9.4). GRIB2 reads
-    * templates 5.0/7.0; GRIB1 (r9) reads the BDS — IBM 32-bit
-    * reference value (regulation 92.6.4), PDS decimal scale, BMS
-    * bitmap — for grid-point simple packing. Bitmapped grids surface
-    * missing points as NaN. Any OTHER packing (complex, JPEG2000,
-    * PNG, spherical harmonics) refuses loudly — the codec-gate
-    * discipline; this decoder never guesses at bytes it does not
-    * understand. Returns one value array per message, grid-ordered as
-    * transmitted (row-major for lat/lon grids). */
-  def values(rawBytes: Array[Byte]): Seq[(Message, Array[Double])] =
-    CodecGate.gated("GRIB") {
-    // bind the UNWRAPPED array once — every Pack offset below indexes
-    // into it, so the gz sniff must never mix raw and inflated bytes
-    val bytes = unwrap(rawBytes)
-    parse(bytes).map { case (m, p) => (m, decodeMessage(bytes, m, p)) }
-  }
-
-  /** Lazy per-message twin of [[values]] for whole-archive tasks (the
-    * gz-wrapped split shape, where gzip's non-seekability forces one
-    * task to walk every message): the section walk runs once up
-    * front, then each `next()` decodes ONE message's value array — so
-    * task memory holds the inflated archive plus a single message's
+  /** PIXEL decode for BOTH editions, one lazy step per message: the
+    * section walk runs once up front, then each `next()` decodes ONE
+    * message's value array — so a whole-archive task (the gz-wrapped
+    * split shape, where gzip's non-seekability forces one task to walk
+    * every message) holds the inflated archive plus a single message's
     * doubles, never every message's decoded output at once (r14
-    * advice: the eager Seq made a large wrapped archive OOM a task
-    * rather than degrade). Refusals keep the [[CodecGate]] naming,
-    * surfaced per message as the iterator advances. */
+    * advice: an eager Seq made a large wrapped archive OOM a task
+    * rather than degrade). Decodes GRIB2 simple 5.0, complex 5.2/5.3,
+    * lossless JPEG2000 5.40, PNG 5.41, CCSDS/AEC 5.42 and spectral
+    * simple 5.50; GRIB1 grid-point simple (IBM 32-bit reference value,
+    * regulation 92.6.4, PDS decimal scale, BMS bitmap), second-order
+    * and spherical-harmonic simple packing. Each value is
+    * Y = (R + X·2^E) / 10^D (regulation 92.9.4) after the packing's
+    * unpack; bitmapped grids surface missing points as NaN. Anything
+    * else (5.51, GRIBEX sub-truncated spectral complex, octet-14
+    * extensions) refuses by name — the codec-gate discipline; this
+    * decoder never guesses at bytes it does not understand. Values
+    * are grid-ordered as transmitted (row-major for lat/lon grids).
+    * Refusals keep the [[CodecGate]] naming, surfaced per message as
+    * the iterator advances. */
   def valuesIterator(rawBytes: Array[Byte]): Iterator[(Message, Array[Double])] = {
     val (bytes, metas) = CodecGate.gated("GRIB") {
       val b = unwrap(rawBytes)
@@ -978,8 +967,13 @@ object GribMeta {
     }
   }
 
+  /** Every message's values at once — [[valuesIterator]] drained, for
+    * single-message splits and driver-side callers. */
+  def values(rawBytes: Array[Byte]): Seq[(Message, Array[Double])] =
+    valuesIterator(rawBytes).toVector
+
   /** Decode ONE parsed message's payload into grid-ordered values —
-    * the shared kernel behind [[values]] and [[valuesIterator]];
+    * the kernel behind [[valuesIterator]];
     * `bytes` is the UNWRAPPED archive the message's Pack offsets
     * index into. */
   private def decodeMessage(bytes: Array[Byte], m: Message,
@@ -1829,33 +1823,6 @@ object GribMeta {
       i += 1
     }
     xs
-  }
-
-  /** Distributed GRIB2→rows decode over a binaryFile glob (the
-    * [[GeoTiff.readRaster]] / [[NetCdf.readGrid]] twin): one task per
-    * archive file, one row per grid point —
-    * `(path, msg_index, param_category, param_number, ref_time, x, y,
-    * value)` with (x, y) resolved through Ni when the grid is lat/lon
-    * template 3.0 (else x = running index, y = 0); bitmapped-missing
-    * points dropped. */
-  def readValues(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (p, bytes) =>
-        values(bytes).iterator.flatMap { case (m, vs) =>
-          val ni = if (m.ni > 0) m.ni else vs.length
-          vs.iterator.zipWithIndex
-            .filterNot(_._1.isNaN)
-            .map { case (v, i) =>
-              (p, m.msgIndex, m.paramCategory, m.paramNumber, m.refTime,
-                i % ni, i / ni, v)
-            }
-        }
-      })
-      .toDF("path", "msg_index", "param_category", "param_number",
-        "ref_time", "x", "y", "value")
   }
 
   /** Archive inventory: one row per GRIB message across every file

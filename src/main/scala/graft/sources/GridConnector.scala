@@ -103,7 +103,7 @@ final class FileGridScanBuilder(format: GridFormat) extends ScanBuilder
   override def build(): Scan = new FileGridScan(format, required, filters)
 }
 
-class FileGridScan(format: GridFormat, required: StructType, filters: Seq[Filter])
+final class FileGridScan(format: GridFormat, required: StructType, filters: Seq[Filter])
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this

@@ -98,14 +98,11 @@ final case class H5Format(path: String, dsOpt: Option[String],
     keepMissing: Boolean, maxSplitsPerFile: Int) extends GridFormat {
   override def name: String = s"graft_h5($path)"
   override def schema: StructType = H5GridSource.fullSchema
-  override def planSplits(filters: Seq[Filter]): Array[InputPartition] =
-    plan(FileGridScan.stringPreds(filters, "path"),
-      FileGridScan.stringPreds(filters, "dataset"))
-
-  /** (file × dataset) splits under function predicates — the pushed
-    * `path`/`dataset` filters, or [[H5Scan]]'s. */
-  private[sources] def plan(pathPreds: Seq[String => Boolean],
-      dsPreds: Seq[String => Boolean]): Array[InputPartition] = {
+  /** (file × dataset) splits, pruned by the pushed `path`/`dataset`
+    * filters. */
+  override def planSplits(filters: Seq[Filter]): Array[InputPartition] = {
+    val pathPreds = FileGridScan.stringPreds(filters, "path")
+    val dsPreds = FileGridScan.stringPreds(filters, "dataset")
     val want: String => Boolean =
       n => dsOpt.forall(_ == n) && dsPreds.forall(_(n))
     val explicit = dsOpt.nonEmpty || dsPreds.nonEmpty
@@ -201,18 +198,6 @@ final case class H5Format(path: String, dsOpt: Option[String],
       case other => unknown(other)
     }
   }
-}
-
-/** The shared scan with its split predicates given as functions. */
-final class H5Scan(path: String, dsOpt: Option[String],
-    required: StructType, keepFill: Boolean,
-    pathPreds: Seq[String => Boolean] = Nil,
-    dsPreds: Seq[String => Boolean] = Nil,
-    maxSplitsPerFile: Int = 8)
-    extends FileGridScan(H5Format(path, dsOpt, keepFill, maxSplitsPerFile),
-      required, Nil) {
-  override def planInputPartitions(): Array[InputPartition] =
-    H5Format(path, dsOpt, keepFill, maxSplitsPerFile).plan(pathPreds, dsPreds)
 }
 
 final case class H5Partition(file: String, datasets: Option[Seq[String]])

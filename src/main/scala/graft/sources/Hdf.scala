@@ -1,8 +1,6 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** CLEAN-ROOM HDF4 (classic "Hierarchical Data Format") codec — the
   * acquisition format of the reference's MODIS path
@@ -54,10 +52,9 @@ import org.apache.spark.sql.functions._
   * discipline).
   *
   * Everything here is bounded by the GRID, not the archive: decode
-  * runs task-side over binaryFile splits ([[readGrid]]), the DSv2
-  * planner ([[HdfGridSource]]) reads only a header prefix, and the
-  * writer ([[encode]]) exists for the publish/fixture side of the i65
-  * transport cycle. */
+  * runs task-side in the [[HdfGridSource]] scan, whose planner reads
+  * only a header prefix, and the writer ([[encode]]) exists for the
+  * publish/fixture side of the i65 transport cycle. */
 object Hdf {
 
   // -- tags (public assignments from the HDF spec's tag table) ----------
@@ -286,7 +283,7 @@ object Hdf {
     throw new IllegalArgumentException(
       s"external element references sibling file '$name' but no " +
         "resolver was provided — byte-level decode cannot reach other " +
-        "files; use readGrid/HdfGridSource (sibling-relative) or pass " +
+        "files; use HdfGridSource (sibling-relative) or pass " +
         "an ExtResolver")
 
   /** Sibling-relative external-file resolver over Hadoop FS — the
@@ -1305,25 +1302,5 @@ object Hdf {
     }
     elements.foreach(e => out.put(e.bytes))
     out.array()
-  }
-
-  // -- distributed read -------------------------------------------------
-
-  /** Distributed HDF→rows decode over a binaryFile glob (the
-    * [[NetCdf.readGrid]] twin): one task per tile file, one row per
-    * non-fill grid cell of the named SDS —
-    * `(path, sds, x, y, value)`. */
-  def readGrid(spark: SparkSession, pathOrGlob: String, sdsName: String)
-      : DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathOrGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (p, bytes) =>
-        gridCells(decode(bytes), sdsName, memoizedSiblings(p))
-          .filterNot(_.value.isNaN)
-          .map(c => (p, sdsName, c.x, c.y, c.value))
-      })
-      .toDF("path", "sds", "x", "y", "value")
   }
 }

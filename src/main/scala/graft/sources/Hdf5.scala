@@ -66,9 +66,10 @@ import org.apache.spark.sql.functions._
   * [[denseLinks]]); filtered heaps, nested indirection
   * and huge/tiny IDs refuse by name.
   *
-  * Scale shape: [[scan]] and [[readGrid]] run task-side over
-  * binaryFile — one task per file, the driver never touches payload
-  * bytes (the [[Hdf]]/[[NetCdf]]/[[GeoTiff]] discipline). */
+  * Scale shape: [[scan]] runs task-side over binaryFile and
+  * [[H5GridSource]] decodes grids inside its scan tasks — the driver
+  * never touches payload bytes (the [[Hdf]]/[[NetCdf]]/[[GeoTiff]]
+  * discipline). */
 object Hdf5 {
 
   private val Signature = Array[Byte](0x89.toByte, 'H', 'D', 'F',
@@ -2014,7 +2015,7 @@ object Hdf5 {
   /** Rank-2 (y, x) dataset as cells with netCDF CF semantics: fill
     * (attribute `_FillValue`, else the fill-value message) matched on
     * the RAW value → NaN; `scale_factor`/`add_offset` applied to the
-    * survivors — the [[NetCdf.readGrid]] contract. */
+    * survivors — the [[NetCdf.gridCells]] contract. */
   def gridCells(bytes: Array[Byte], f: Hdf5File,
       path: String): Iterator[GridCell] = {
     val d = f.datasetAt(path)
@@ -2362,23 +2363,5 @@ object Hdf5 {
           d.dims.mkString("x"), d.dtype.name, d.n, d.fill))
       })
       .toDF("path", "dataset", "rank", "dims", "dtype", "n", "fill")
-  }
-
-  /** Distributed HDF5→rows decode (the [[NetCdf.readGrid]] twin for
-    * NetCDF-4-contiguous archives): one task per file, one row per
-    * non-fill cell of the named rank-2 dataset. */
-  def readGrid(spark: SparkSession, pathOrGlob: String,
-      dataset: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathOrGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (p, bytes) =>
-        val f = decode(bytes)
-        gridCells(bytes, f, dataset)
-          .filterNot(_.value.isNaN)
-          .map(c => (p, dataset, c.x, c.y, c.value))
-      })
-      .toDF("path", "dataset", "x", "y", "value")
   }
 }

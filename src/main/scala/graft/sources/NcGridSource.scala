@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     skips per-cell georeferencing and timestamp boxing;
   *   - fill cells are dropped at the source (`keepFill=true` keeps
   *     them as NULL value rows); an empty record dim (numrecs=0) plans
-  *     zero splits, matching readGrid's zero rows.
+  *     zero splits, matching [[NetCdf.gridCells]]' zero cells.
   */
 class NcGridSource extends GridProvider(NcGridSource.fullSchema) {
   override protected def format(options: util.Map[String, String]): GridFormat = {

@@ -18,7 +18,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * every case slicing `ds[var].isel(time=i)` into per-date 2-D grids.
   *
   * Same rungs as the [[GeoTiff]] codec:
-  *   - decode is TASK-side (see [[NcGridSource]] / [[readGrid]]) —
+  *   - decode is TASK-side (see [[NcGridSource]]) —
   *     the driver never touches payload bytes;
   *   - unsupported layouts fail LOUDLY (char data variables, CDF-5
   *     type codes smuggled into classic files, more than one
@@ -756,27 +756,5 @@ object NetCdf {
         lats.map(_(y)).getOrElse(y.toDouble),
         if (isFill) Double.NaN else raw * scale + offset)
     }
-  }
-
-  /** Distributed `.nc`→rows decode over a binaryFile glob — the
-    * [[GeoTiff.readRaster]] twin: one task per file, rows
-    * `(path, var, t, time, x, y, lon, lat, value)`, fill cells dropped
-    * unless `keepFill`. */
-  def readGrid(spark: org.apache.spark.sql.SparkSession, path: String,
-      varName: String, keepFill: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (p, bytes) =>
-        gridCells(decode(bytes), varName)
-          .filter(c => keepFill || !c.value.isNaN)
-          .map(c => (p, varName, c.t,
-            c.timeMicros.map(m => new java.sql.Timestamp(m / 1000)).orNull,
-            c.x, c.y, c.lon, c.lat,
-            if (c.value.isNaN) None else Some(c.value)))
-      })
-      .toDF("path", "var", "t", "time", "x", "y", "lon", "lat", "value")
   }
 }

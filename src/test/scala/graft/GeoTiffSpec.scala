@@ -6,12 +6,16 @@ import org.apache.spark.sql.functions._
 
 /** The GDAL-free GeoTIFF codec: encode/decode round-trips, both byte
   * orders, strip and tile layouts, deflate, nodata, georeferencing,
-  * the distributed binaryFile decode, and the reference's per-date
-  * publish layout. */
+  * the distributed decode through [[graft.sources.TiffGridSource]],
+  * and the reference's per-date publish layout. */
 class GeoTiffSpec extends SparkSpec {
 
   private def grid(w: Int, h: Int)(f: (Int, Int) => Double) =
     Array.tabulate(w * h)(i => f(i % w, i / w))
+
+  private def tiffRows(path: String, keepNodata: Boolean = false) =
+    spark.read.format("graft.sources.TiffGridSource").option("path", path)
+      .option("keepNodata", keepNodata.toString).load()
 
   test("float32 strip round-trip: values, geo tags, nodata survive exactly") {
     val r = Raster(4, 3, 0.25, 0.5, 10.0, 20.0, Some(-9999.0),
@@ -128,14 +132,14 @@ class GeoTiffSpec extends SparkSpec {
     assert(entries.map(_._1) == entries.map(_._1).sorted)
   }
 
-  test("readRaster decodes a directory of tifs task-side into georeferenced rows") {
+  test("TiffGridSource decodes a directory of tifs task-side into georeferenced rows") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tifs").toString
     val a = Raster(2, 2, 1, 1, 100, 50, Some(-9999.0),
       Array(1.0, -9999.0, 3.0, 4.0))
     val bb = Raster(2, 1, 1, 1, 0, 0, None, Array(7.0, 8.0))
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.tif"), GeoTiff.encode(a))
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/b.tif"), GeoTiff.encode(bb))
-    val rows = GeoTiff.readRaster(spark, s"$dir/*.tif")
+    val rows = tiffRows(s"$dir/*.tif")
       .collect().map(r => (r.getString(0).split('/').last, r.getInt(1), r.getInt(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSet
     // nodata pixel (1,0) of a.tif dropped; centers georeferenced
@@ -145,7 +149,7 @@ class GeoTiffSpec extends SparkSpec {
       ("a.tif", 1, 1, 101.5, 48.5, 4.0),
       ("b.tif", 0, 0, 0.5, -0.5, 7.0),
       ("b.tif", 1, 0, 1.5, -0.5, 8.0)), rows.toString)
-    val withNd = GeoTiff.readRaster(spark, s"$dir/a.tif", keepNodata = true)
+    val withNd = tiffRows(s"$dir/a.tif", keepNodata = true)
     assert(withNd.count() == 4 && withNd.filter(col("value").isNull).count() == 1)
   }
 
@@ -166,7 +170,7 @@ class GeoTiffSpec extends SparkSpec {
     // the distributed reader drops the NaN pixel, not just -9999s
     val dir = java.nio.file.Files.createTempDirectory("graft_nan").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/n.tif"), lower)
-    val rows = GeoTiff.readRaster(spark, s"$dir/n.tif").collect()
+    val rows = tiffRows(s"$dir/n.tif").collect()
     assert(rows.length == 3 && rows.forall(!_.getDouble(5).isNaN),
       rows.mkString(";"))
   }
@@ -268,11 +272,19 @@ class GeoTiffSpec extends SparkSpec {
     val withNd = spark.read.format("graft.sources.TiffGridSource")
       .option("path", s"$dir/a.tif").option("keepNodata", "true").load()
     assert(withNd.count() == 4 && withNd.filter(col("value").isNull).count() == 1)
-    // matches the functional reader row-for-row
-    val fnRows = GeoTiff.readRaster(spark, s"$dir/*.tif")
-      .select(col("x"), col("y"), col("value")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSet
-    assert(fnRows == rows.map(t => (t._2, t._3, t._4)))
+    // matches the codec decoded on the driver row-for-row, nodata
+    // pixels skipped
+    val codecRows = Seq("a.tif", "b.tif").flatMap { name =>
+      val r = GeoTiff.decode(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/$name")))
+      for {
+        y <- 0 until r.height
+        x <- 0 until r.width
+        v = r.value(x, y)
+        if !r.isNodata(v)
+      } yield (name, x, y, v)
+    }.toSet
+    assert(codecRows == rows)
   }
 
   test("gzip-wrapped TIFFs (.tif.gz, the CHIRPS distribution shape): " +
@@ -662,7 +674,7 @@ class GeoTiffSpec extends SparkSpec {
     val landed = java.nio.file.Files.copy(dest,
       dest.getParent.resolve("rainfall_2024-06-01.tif"),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val re = GeoTiff.readRaster(spark, landed.toString).collect()
+    val re = tiffRows(landed.toString).collect()
     assert(re.length == 3, re.mkString(";"))
   }
 }

@@ -257,10 +257,11 @@ class GribMetaSpec extends SparkSpec {
     assert(GribMeta.values(int1).head._2.toSeq == Seq(5.0, 10.0, 255.0))
     // but the INVENTORY walk still catalogs what it cannot decode
     assert(GribMeta.decode(ext).map(_.edition) == Seq(1))
-    // readValues fans GRIB1 out too (category -1, param from the PDS)
+    // the DSv2 scan fans GRIB1 out too (category -1, param from the PDS)
     val dir = java.nio.file.Files.createTempDirectory("graft_g1vals").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.grib"), bm)
-    val rows = GribMeta.readValues(spark, s"$dir/a.grib")
+    val rows = spark.read.format("graft.sources.GribGridSource")
+      .option("path", s"$dir/a.grib").load()
       .collect().map(r => (r.getInt(5), r.getInt(6), r.getDouble(7))).toSet
     assert(rows == Set((0, 0, 7.0), (1, 1, 9.0)), rows.toString)
   }
@@ -969,7 +970,8 @@ class GribMetaSpec extends SparkSpec {
       cat = 2, num = 3)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/fc.grib2"), u ++ v)
-    val rows = GribMeta.readValues(spark, s"$dir/*.grib2")
+    val rows = spark.read.format("graft.sources.GribGridSource")
+      .option("path", s"$dir/*.grib2").load()
     val wind = rows.filter(col("param_number") === 2)
       .select(col("x"), col("y"), col("value").as("u"))
       .join(rows.filter(col("param_number") === 3)

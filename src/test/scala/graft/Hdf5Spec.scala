@@ -2,6 +2,7 @@ package graft
 
 import graft.sources.Hdf5
 import java.nio.{ByteBuffer, ByteOrder}
+import org.apache.spark.sql.sources.StringEndsWith
 
 /** The clean-room HDF5 contiguous-subset reader against INDEPENDENT
   * hand-built fixtures (the NetCdfSpec discipline — every structure
@@ -301,9 +302,8 @@ class Hdf5Spec extends SparkSpec {
     // partition — the target file is read once, not once per link
     Files.write(dir.resolve("a2.h5"),
       fixtureExtLinks(Seq(("le", "b.h5", "/temp"))))
-    val parts = new graft.sources.H5Scan(dir.toString, Some("/le"),
-      graft.sources.H5GridSource.fullSchema, false, Nil, Nil, 8)
-      .planInputPartitions()
+    val parts = graft.sources.H5Format(dir.toString, Some("/le"), false, 8)
+      .planSplits(Nil)
     val extParts = parts.collect { case e: graft.sources.H5ExtPartition => e }
     assert(extParts.length == 1 && extParts.head.entries.length == 2,
       parts.toSeq.toString)
@@ -312,9 +312,8 @@ class Hdf5Spec extends SparkSpec {
     assert(twice == 2L * viaLink.length)
     // path predicates prune external planning too: excluding every
     // linking file plans no external partitions
-    val pruned = new graft.sources.H5Scan(dir.toString, Some("/le"),
-      graft.sources.H5GridSource.fullSchema, false,
-      Seq((p: String) => p.endsWith("b.h5")), Nil, 8).planInputPartitions()
+    val pruned = graft.sources.H5Format(dir.toString, Some("/le"), false, 8)
+      .planSplits(Seq(StringEndsWith("path", "b.h5")))
     assert(!pruned.exists(_.isInstanceOf[graft.sources.H5ExtPartition]),
       pruned.toSeq.toString)
   }
@@ -329,9 +328,8 @@ class Hdf5Spec extends SparkSpec {
     Files.write(dir.resolve("a.h5"),
       fixtureExtLinks(Seq(("le", "broken.h5", "/temp"))))
     val e = intercept[IllegalArgumentException] {
-      new graft.sources.H5Scan(dir.toString, Some("/le"),
-        graft.sources.H5GridSource.fullSchema, false, Nil, Nil, 8)
-        .planInputPartitions()
+      graft.sources.H5Format(dir.toString, Some("/le"), false, 8)
+        .planSplits(Nil)
     }
     assert(e.getMessage.contains("failed to decode"), e.getMessage)
     val cause = e.getCause
@@ -340,9 +338,8 @@ class Hdf5Spec extends SparkSpec {
       s"outer '${e.getMessage}' must carry root '${cause.getMessage}'")
     // the undecodable file ITSELF doesn't kill an unfiltered plan: it
     // contributes one whole-file split whose TASK refuses loudly
-    val parts = new graft.sources.H5Scan(dir.toString, None,
-      graft.sources.H5GridSource.fullSchema, false, Nil, Nil, 8)
-      .planInputPartitions()
+    val parts = graft.sources.H5Format(dir.toString, None, false, 8)
+      .planSplits(Nil)
     assert(parts.exists {
       case graft.sources.H5Partition(f, None) => f.endsWith("broken.h5")
       case _ => false
@@ -1595,7 +1592,7 @@ class Hdf5Spec extends SparkSpec {
     assert(cells.find(c => c.x == 0 && c.y == 0).get.value == 102.5)
   }
 
-  test("scan and readGrid run task-side over a directory") {
+  test("scan and H5GridSource run task-side over a directory") {
     val dir = java.nio.file.Files.createTempDirectory("graft_h5").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.h5"),
       fixtureV2()._1)
@@ -1606,7 +1603,8 @@ class Hdf5Spec extends SparkSpec {
         r.getString(3), r.getString(4))).toSet
     assert(inv == Set(("a.h5", "/temp", "2x3", "int16"),
       ("b.h5", "/rain", "2x2", "float32")), inv.toString)
-    val rows = Hdf5.readGrid(spark, s"$dir/a.h5", "/temp").collect()
+    val rows = spark.read.format("graft.sources.H5GridSource")
+      .option("path", s"$dir/a.h5").option("dataset", "/temp").load().collect()
     assert(rows.length == 5) // the fill hole dropped
     assert(rows.map(_.getDouble(4)).sum == 52.0 + 152 + 202 + 252 + 302)
   }
@@ -2039,15 +2037,16 @@ class Hdf5Spec extends SparkSpec {
       .option("path", bad).load().filter(col("dataset") === "nothing")
     assert(badDf.rdd.getNumPartitions == 1)
     intercept[Exception] { badDf.count() }
-    // DSv2 rows match readGrid
-    val fn = Hdf5.readGrid(spark, s"$dir/*.h5", "/t2m")
-      .select("path", "x", "y", "value").collect()
-      .map(r => (r.getString(0).split('/').last, r.getInt(1), r.getInt(2),
-        r.getDouble(3))).toSet
+    // DSv2 rows match the codec decoded on the driver, fills dropped
+    val codec = Seq("a.h5", "b.h5").flatMap { name =>
+      val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$name"))
+      Hdf5.gridCells(b, Hdf5.decode(b), "/t2m").filterNot(_.value.isNaN)
+        .map(c => (name, c.x, c.y, c.value))
+    }.toSet
     val dsv2 = t2m.select("path", "x", "y", "value").collect()
       .map(r => (r.getString(0).split('/').last, r.getInt(1), r.getInt(2),
         r.getDouble(3))).toSet
-    assert(fn == dsv2)
+    assert(codec == dsv2)
   }
 
   /** Hand-built file holding ONE rank-2 dataset '/bnds' of a COMPOUND

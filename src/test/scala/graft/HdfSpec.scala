@@ -488,7 +488,8 @@ class HdfSpec extends SparkSpec {
     refuses(extHdr(6, 4, "/etc/x.dat"), "absolute")
     refuses(extHdr(6, 8, "ext.dat"), "past sibling")
     // the distributed read path resolves siblings task-side
-    val rows = Hdf.readGrid(spark, mainPath, "sds_1").collect()
+    val rows = spark.read.format("graft.sources.HdfGridSource")
+      .option("path", mainPath).option("sds", "sds_1").load().collect()
     assert(rows.map(r => (r.getInt(2), r.getInt(3), r.getDouble(4))).sorted
       .toSeq == Seq((0, 0, 1200.0), (1, 0, -7.0), (2, 0, 31000.0)))
   }
@@ -671,15 +672,17 @@ class HdfSpec extends SparkSpec {
       .option("path", bad).load().filter(col("sds") === "nothing")
     assert(badDf.rdd.getNumPartitions == 1)
     intercept[Exception] { badDf.count() }
-    // readGrid matches the DSv2 rows
-    val fn = Hdf.readGrid(spark, s"$dir/*.hdf", "ndvi")
-      .select("path", "x", "y", "value").collect()
-      .map(r => (r.getString(0).split('/').last, r.getInt(1), r.getInt(2),
-        r.getDouble(3))).toSet
+    // the DSv2 rows match the codec decoded on the driver, fills dropped
+    val codec = Seq("a.hdf", "b.hdf").flatMap { name =>
+      val f = s"$dir/$name"
+      val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))
+      Hdf.gridCells(Hdf.decode(b), "ndvi", Hdf.memoizedSiblings(f))
+        .filterNot(_.value.isNaN).map(c => (name, c.x, c.y, c.value))
+    }.toSet
     val dsv2 = ndviOnly.collect()
       .map(r => (r.getString(0).split('/').last, r.getInt(2), r.getInt(3),
         r.getDouble(4))).toSet
-    assert(fn == dsv2)
+    assert(codec == dsv2)
   }
 
   test("HdfGridSource: wide products group SDS into maxSplitsPerFile splits, one file read each") {

@@ -12,6 +12,29 @@ class IngestSpec extends SparkSpec {
     }
   }
 
+  test("i62–i67 read their grid files through a FileGridScan, never a binaryFile scan") {
+    import graft.sources.FileGridScan
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val plans = new AdaptiveSparkPlanHelper {}
+    val wrong = Seq(Ingest.i62, Ingest.i63, Ingest.i64, Ingest.i65, Ingest.i66,
+      Ingest.i67).flatMap { q =>
+      val plan = q.fn(spark, sf).queryExecution.executedPlan
+      val gridScans = plans.collect(plan) {
+        case b: BatchScanExec if b.scan.isInstanceOf[FileGridScan] => b
+      }
+      val binaryScans = plans.collect(plan) {
+        case f: FileSourceScanExec if f.relation.fileFormat.isInstanceOf[BinaryFileFormat] => f
+      }
+      if (gridScans.nonEmpty && binaryScans.isEmpty) None
+      else Some(s"${q.name}: ${gridScans.size} FileGridScan, " +
+        s"${binaryScans.size} binaryFile scan\n$plan")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
   test("unitConvert implements the four reference operations") {
     val df = spark.range(1).select(lit(10.0).as("v"))
     def eval(op: String, c: Double): Double =

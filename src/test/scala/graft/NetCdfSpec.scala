@@ -754,12 +754,14 @@ class NetCdfSpec extends SparkSpec {
     // whole file
     val hdr = graft.sources.NcGridSource.planningHeader(s"$dir/a.nc")
     assert(graft.sources.NcGridSource.timeSteps(hdr, "rfe") == 2)
-    // matches the functional reader row-for-row
-    val fnRows = NetCdf.readGrid(spark, s"$dir/*.nc", "rfe")
-      .select(col("path"), col("t"), col("x"), col("y"), col("value")).collect()
-      .map(r => (r.getString(0).split('/').last, r.getInt(1), r.getInt(2),
-        r.getInt(3), r.getDouble(4))).toSet
-    assert(fnRows == rows.map(r => (r.getString(0).split('/').last, r.getInt(2),
+    // matches the codec decoded on the driver row-for-row, fills
+    // dropped
+    val codecRows = Seq("a.nc", "b.nc").flatMap { name =>
+      val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$name"))
+      NetCdf.gridCells(NetCdf.decode(b), "rfe").filterNot(_.value.isNaN)
+        .map(c => (name, c.t, c.x, c.y, c.value))
+    }.toSet
+    assert(codecRows == rows.map(r => (r.getString(0).split('/').last, r.getInt(2),
       r.getInt(4), r.getInt(5), r.getDouble(8))).toSet)
   }
 }

@@ -55,7 +55,8 @@ class ReferenceCycleSpec extends SparkSpec {
             // decode task-side, apply the reference's anomaly product:
             // current − climatology normal, nodata-masked on either side
             val normal = 10.0
-            val grid = GeoTiff.readRaster(spark, landed.toString)
+            val grid = spark.read.format("graft.sources.TiffGridSource")
+              .option("path", landed.toString).load()
               .select(col("x"), col("y"), (col("value") - normal).as("anomaly"))
             val out = GeoTiff.publishTif(grid, "x", "y", "anomaly",
               slice.width, slice.height, s"$root/out", "rain_anomaly", dateKey,
