@@ -60,6 +60,12 @@ object GraftConf {
       // sizes the cache once, when the JVM first generates code, so it
       // can only be set here at build time, never per query.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // the `file:` file system sets permissions inside the JVM instead
+      // of running a `chmod` process per created file, .crc and directory
+      // (sources.LocalFs). Hadoop caches file systems by scheme and user,
+      // so it serves a JVM whose first `file:` lookup is made after this
+      // session is built
+      .config("spark.hadoop.fs.file.impl", classOf[sources.LocalFs].getName)
       .withExtensions(new GraftExtensions)
 
   /** Holds AQE partition coalescing off in an [[isolated]] scope: for

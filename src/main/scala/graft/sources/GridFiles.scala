@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
 
 /** Shared Hadoop-FS plumbing for the five grid DSv2 sources (Tiff, Nc,
@@ -48,7 +47,7 @@ object GridFiles {
 
   private def fileSystem(path: String): (FileSystem, Path) = {
     val p = new Path(path)
-    (p.getFileSystem(new Configuration()), p)
+    (HadoopFs.fileSystem(p), p)
   }
 
   /** `read` over `file`'s opened stream, closed after; its second

@@ -301,7 +301,7 @@ object Hdf {
         "'.'/'..' components — only sibling-relative names resolve")
     val dir = new org.apache.hadoop.fs.Path(basePath).getParent
     val p = new org.apache.hadoop.fs.Path(dir, name)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = HadoopFs.fileSystem(p)
     require(fs.isFile(p),
       s"external element file '$name' missing (resolved to $p)")
     val st = fs.getFileStatus(p)

@@ -234,7 +234,7 @@ object Hdf5 {
           "sibling-relative file names")
       val tFile = new org.apache.hadoop.fs.Path(
         s"${curDir.toString.stripSuffix("/")}/${cur.file}")
-      val fs = tFile.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val fs = HadoopFs.fileSystem(tFile)
       require(fs.isFile(tFile),
         s"external link '${link.path}': target file '${cur.file}' " +
           s"missing (resolved to $tFile)")

@@ -1,10 +1,8 @@
 package graft.sources
 
 import java.util
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
@@ -97,8 +95,7 @@ object PublishedTable {
     p
   }
 
-  private def fs(path: String): FileSystem =
-    new Path(path).getFileSystem(new Configuration())
+  private[sources] def fs(path: String): FileSystem = HadoopFs.fileSystem(new Path(path))
 
   private def versionOf(name: String): Option[Long] =
     if (name.startsWith("v")) name.stripPrefix("v").toLongOption else None
@@ -420,11 +417,9 @@ final class PublishedReaderFactory(required: StructType)
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[PublishedFilePartition]
     PublishedTable.synchronized(graft.sources.PublishedTableCounters.filesOpened.incrementAndGet())
-    val conf = new Configuration()
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA,
+    val conf = HadoopFs.confWith(ReadSupport.PARQUET_READ_SCHEMA,
       PublishedTable.toMessageType(required).toString)
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(), new Path(p.absPath)).withConf(conf).build()
+    val reader = HadoopFs.parquetReader(new GroupReadSupport(), new Path(p.absPath), conf)
     new PartitionReader[InternalRow] {
       private var current: org.apache.parquet.example.data.Group = _
       override def next(): Boolean = { current = reader.read(); current != null }
@@ -518,7 +513,7 @@ final class PublishedBatchWrite(root: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val f = new Path(root).getFileSystem(new Configuration())
+    val f = PublishedTable.fs(root)
     messages.collect { case PublishedCommit(fs) => fs }.flatten
       .foreach { case (_, rel) => f.delete(new Path(s"$root/$rel"), false) }
   }
@@ -546,7 +541,8 @@ final class PublishedDataWriter(root: String, schema: StructType,
     val rel = s"data/$dateKey/part-$partitionId-$taskId-${java.util.UUID.randomUUID()}.parquet"
     val w = ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new Path(s"$root/$rel"), new Configuration()))
+        new Path(s"$root/$rel"), HadoopFs.conf))
+      .withConf(HadoopFs.conf)
       .withType(msgType)
       .build()
     (w, rel)
@@ -578,8 +574,7 @@ final class PublishedDataWriter(root: String, schema: StructType,
   override def abort(): Unit = {
     writers.values.foreach { case (w, rel) =>
       try w.close() catch { case scala.util.control.NonFatal(_) => }
-      new Path(s"$root/$rel").getFileSystem(new Configuration())
-        .delete(new Path(s"$root/$rel"), false)
+      PublishedTable.fs(root).delete(new Path(s"$root/$rel"), false)
     }
   }
 

@@ -5,7 +5,6 @@ import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.functions._
@@ -151,7 +150,7 @@ object StateStore {
   /** One log file's rows, columns found by name; a file that is not
     * parquet throws. */
   private def readFile(file: Path, conf: Configuration): Vector[LogRow] = {
-    val reader = ParquetReader.builder(new GroupReadSupport(), file).withConf(conf).build()
+    val reader = HadoopFs.parquetReader(new GroupReadSupport(), file, conf)
     try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
       LogRow(g.getString("dataset_id", 0), g.getString("key", 0), g.getString("value", 0),
         g.getLong("seq", 0))

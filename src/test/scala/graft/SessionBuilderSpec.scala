@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * oracle checks and the benchmarks time. `Sf1Data` and `SkewData`
   * keep their own builders because the corpora they write (and the
   * digests checked against them) were generated on those sessions.
-  * GraftConf is also the only writer of a session's conf. */
+  * GraftConf is also the only writer of a session's conf, and the
+  * sources read files through the one Hadoop conf of `HadoopFs`. */
 class SessionBuilderSpec extends AnyFunSuite {
 
   private val allowed = Set("GraftConf.scala", "Sf1Data.scala", "SkewData.scala")
@@ -46,5 +47,17 @@ class SessionBuilderSpec extends AnyFunSuite {
     assert(sites.exists(_.getFileName.toString == "GraftConf.scala"), sites)
     val stray = sites.filterNot(_.getFileName.toString == "GraftConf.scala")
     assert(stray.isEmpty, s"session conf written in: ${stray.mkString(", ")}")
+  }
+
+  test("new Configuration( appears under graft/sources only in HadoopFs") {
+    // a fresh Configuration parses Hadoop's XML defaults again on first
+    // use and misses the session's spark.hadoop.* keys; the sources
+    // share HadoopFs's conf (and copy it there to set a key)
+    val sources = Paths.get("src/main/scala/graft/sources")
+    val sites = sitesOf("new\\s+(org\\.apache\\.hadoop\\.conf\\.)?Configuration\\s*\\(")
+      .filter(_.startsWith(sources))
+    assert(sites.exists(_.getFileName.toString == "HadoopFs.scala"), sites)
+    val stray = sites.filterNot(_.getFileName.toString == "HadoopFs.scala")
+    assert(stray.isEmpty, s"use HadoopFs.conf in: ${stray.mkString(", ")}")
   }
 }
