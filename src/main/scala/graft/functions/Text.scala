@@ -61,14 +61,16 @@ object Text {
       lit(0L),
       (acc, c) => (acc * 31 + c) % RollMod)
 
-  /** MinHash signatures, computed the codegen-friendly way: explode the
-    * shingle stream, hash each shingle ONCE (the string hash dominates),
-    * then take `numHashes` grouped minima of cheap long re-hashes —
-    * a single partial-aggregating shuffle on doc id, all inside
-    * whole-stage codegen. (A per-row higher-order fold is interpreted
-    * and was measured ~10× slower at sf0.1.)
+  /** MinHash signatures as a one-pass per-row projection: each row's
+    * shingle array goes through [[XxMinhashSigExpr]], which hashes each
+    * shingle once and keeps `numHashes` minima of cheap long re-hashes,
+    * inside whole-stage codegen. There is no explode, no aggregate and
+    * no shuffle, so the input must hold ONE row per id: rows sharing an
+    * id are not merged, each gets its own signature. Rows with an empty
+    * shingle array are dropped.
     *
-    * Input: (id, shingleArr); output: (id, sig: array<bigint>[numHashes]).
+    * Input: (id, shingleArr); output: (id, sig: array<bigint>[numHashes],
+    * then the `carry` columns).
     */
   def minhashSignatures(docs: org.apache.spark.sql.DataFrame, idCol: String,
       shingleArr: Column, numHashes: Int = 64,

@@ -1179,13 +1179,13 @@ object Relational {
     * fixed decimal grid stays meaningful at any node count, where raw
     * 1/nn probabilities would sink below the grid on a billion-node
     * graph. Iteration is DELTA-GATED under Components' round-cap
-    * discipline: rounds run in blocks of 4 up to `graft.q36.roundCap`
-    * (default 48), stopping when the block's L1 rank movement —
+    * discipline: rounds run in blocks of 4 up to [[Q36RoundCap]],
+    * stopping when the block's L1 rank movement —
     * measured in EXACT integer micro-units on the 6-dec grid, so the
     * adopted round count is a deterministic function of the data —
-    * averages (floor-divided) below `graft.q36.tolMicrosPerNode`
+    * averages (floor-divided) below [[Q36TolMicrosPerNode]]
     * micros per node PER ROUND
-    * (default 1000, i.e. movement under 0.1% of the mean rank;
+    * (movement under 0.1% of the mean rank;
     * per-round normalization keeps the gate block-size-independent).
     *
     * Number discipline: the loop is ALL-INTEGER — ranks live as
@@ -1222,13 +1222,25 @@ object Relational {
   // dir is the count that dir's oracle replays). A keyed map, not a
   // mutable global: two Verifies over different sf dirs in one JVM
   // cannot cross-contaminate each other's oracle SQL, and a consumer
-  // snapshotting oracles before execution gets the 48-round cap
+  // snapshotting oracles before execution gets the round-cap
   // default for dirs not yet run (r9 verdict — the same fix that
   // retired the q10b/q20 last-written-path globals).
   private[graft] val q36AdoptedRounds =
     new java.util.concurrent.ConcurrentHashMap[String, Int]()
   private[graft] def q36RoundsFor(dir: String): Int =
-    q36AdoptedRounds.getOrDefault(dir, 48)
+    q36AdoptedRounds.getOrDefault(dir, Q36RoundCap)
+
+  /** q36's round cap, and the count the oracle unrolls for a dir not
+    * yet run. */
+  val Q36RoundCap = 48
+
+  /** q36's convergence tolerance: rank movement in micros per node per
+    * round (0.1% of the mean rank). */
+  val Q36TolMicrosPerNode = 1000L
+
+  /** Directed-edge count at or below which q36 iterates on the driver
+    * (see [[q36Ranks]]). */
+  val Q36DriverSolveEdgeCap = 2000000L
 
   // Every CTE is MATERIALIZED: DuckDB inlines plain CTEs, and a
   // 40+-round chain inlined into one join tree stalls its optimizer
@@ -1263,10 +1275,16 @@ object Relational {
 
   def q36: QueryDef = QueryDef.dynamic(
     "q36_pagerank")(d =>
-    q36OracleSql(q36RoundsFor(d))) { (spark, dir) =>
-    val cap = math.max(1, spark.conf.get("graft.q36.roundCap", "48").toInt)
+    q36OracleSql(q36RoundsFor(d)))(q36Ranks(_, _))
+
+  /** q36's body. The round cap, the tolerance and the driver-solve
+    * edge cap default to their named constants; specs pass other
+    * values to force a side of each gate. */
+  private[graft] def q36Ranks(spark: org.apache.spark.sql.SparkSession, dir: String,
+      roundCap: Int = Q36RoundCap, tolPerNode: Long = Q36TolMicrosPerNode,
+      driverCap: Long = Q36DriverSolveEdgeCap): org.apache.spark.sql.DataFrame = {
+    val cap = math.max(1, roundCap)
     val blockRounds = 4
-    val tolPerNode = spark.conf.get("graft.q36.tolMicrosPerNode", "1000").toLong
     val t = Tables(spark, dir)
     // Loop-shuffle sizing (the r3 lesson: size iterative-loop shuffles
     // to the data, not the session default), estimated from the
@@ -1320,7 +1338,6 @@ object Relational {
     // tuple collect ~64 MB), far under the driver heap. Above the
     // gate (sf1 is ~11.7M directed edges) the distributed loop below
     // is untouched.
-    val driverCap = spark.conf.get("graft.q36.driverSolveEdgeCap", "2000000").toLong
     if (tot <= driverCap) {
       import spark.implicits._
       val nd = d.select(col("src"), col("deg")).as[(Long, Long)].collect()

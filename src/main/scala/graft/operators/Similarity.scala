@@ -1091,29 +1091,23 @@ object Similarity {
     * below it the exact brute force is both the fastest plan and the
     * DuckDB-oracled one. sf≤0.1 sits ~13× under the default, so every
     * correctness surface runs exact; the ×10 scale artifact routes.
-    * `graft.s18.pairBudget` overrides the bound;
-    * `graft.s18.route=brute|ivf` pins a side (specs force both). */
+    * [[s18Labels]]' `pairBudget` pins a side: 0 forces IVF,
+    * `Long.MaxValue` forces brute force (specs force both). */
   val KnnPairBudget = 1000000L
 
-  /** Counts are BY-NAME: a pinned route (specs, the documented scale
-    * override) never pays the counting job at all (r9 review). */
-  private def knnRouteIsBrute(spark: org.apache.spark.sql.SparkSession,
-      counts: => (Long, Long)): Boolean =
-    spark.conf.get("graft.s18.route", "auto") match {
-      case "brute" => true
-      case "ivf"   => false
-      case _ =>
-        val budget = spark.conf.get("graft.s18.pairBudget",
-          KnnPairBudget.toString).toLong
-        val (nq, nc) = counts
-        val brute = nq * nc <= budget
-        // the route is never silent: the trap the r8 verdict flagged
-        // was walking into the quadratic at 100x without a trace
-        if (!brute) System.err.println(
-          s"[graft] s18: probe x corpus = $nq x $nc exceeds pairBudget " +
-            s"$budget - routing to the IVF-pruned path (set " +
-            "graft.s18.route=brute to force exact brute force)")
-        brute
+  /** Counts are BY-NAME: a pinned route (0 or `Long.MaxValue`) never
+    * pays the counting job at all (r9 review). */
+  private def knnRouteIsBrute(budget: Long, counts: => (Long, Long)): Boolean =
+    budget == Long.MaxValue || budget > 0 && {
+      val (nq, nc) = counts
+      val brute = nq * nc <= budget
+      // the route is never silent: the trap the r8 verdict flagged
+      // was walking into the quadratic at 100x without a trace
+      if (!brute) System.err.println(
+        s"[graft] s18: probe x corpus = $nq x $nc exceeds pairBudget " +
+          s"$budget - routing to the IVF-pruned path, whose labels are " +
+          "approximate, not the exact brute-force ones")
+      brute
     }
 
   val s18 = QueryDef(
@@ -1138,7 +1132,11 @@ object Similarity {
       |SELECT qid AS query_id, CAST(qlabel AS INTEGER) AS true_label,
       |  CAST(label AS INTEGER) AS pred_label, c AS votes,
       |  CAST(CASE WHEN label = qlabel THEN 1 ELSE 0 END AS INTEGER) AS correct
-      |FROM pred WHERE pr = 1 ORDER BY query_id""".stripMargin) { (spark, dir) =>
+      |FROM pred WHERE pr = 1 ORDER BY query_id""".stripMargin)(s18Labels(_, _))
+
+  /** s18's body; `pairBudget` defaults to [[KnnPairBudget]]. */
+  private[graft] def s18Labels(spark: org.apache.spark.sql.SparkSession, dir: String,
+      pairBudget: Long = KnnPairBudget): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.TopKAggregate.register(spark)
     val e = Tables(spark, dir).embeddings
@@ -1156,9 +1154,9 @@ object Similarity {
     val sim = when(denom === 0.0, lit(Double.NegativeInfinity))
       .otherwise(Vectors.dot(col("v"), col("qv")) / denom)
     // structural gate (r8 verdict): ONE counting pass over the table,
-    // and only when the route is actually auto (by-name)
+    // and only when the budget does not pin the route (by-name)
     val scored =
-      if (knnRouteIsBrute(spark, {
+      if (knnRouteIsBrute(pairBudget, {
         val r = e.agg(
           count(when(col("vec_id") % 50 === 0, 1)),
           count(when(col("vec_id") % 50 =!= 0, 1))).first()

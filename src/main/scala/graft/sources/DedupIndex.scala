@@ -138,13 +138,14 @@ object DedupIndex {
     * suite's worst ×10 ratio in r9's scale artifact; the same lesson
     * st14 learned for its gram set). Each returned frame is
     * `(bh<b>, hit<b>)`, cached and counted here so micro-batches only
-    * ever probe memory. Callers unpersist after the stream completes.
+    * ever probe memory; the counts' total comes back with the frames,
+    * for [[bandJoinSides]]. Callers unpersist after the stream completes.
     * At 100 TB the distinct band-hash set is corpus-sized — these
     * cached sets shard across executors (MEMORY_AND_DISK), which is
     * exactly what a shuffled stream-static join needs; nothing is
     * collected to the driver. */
   def bandKeySets(spark: SparkSession, indexDir: String,
-      nBands: Int = 4): IndexedSeq[DataFrame] = {
+      nBands: Int = 4): (IndexedSeq[DataFrame], Long) = {
     // ONE scan + ONE distinct over (band_idx, band_hash); the per-band
     // sets then materialize from that cache, never the parquet again.
     // The previous per-band scan+distinct rounds cost 4 table scans
@@ -159,10 +160,13 @@ object DedupIndex {
         .withColumn(s"hit$b", lit(1))
         .persist()
     }
-    sets.foreach(_.count()) // materialize once, pre-stream
+    val keys = sets.map(_.count()).sum // materialize once, pre-stream
     merged.unpersist() // children hold the rows now; same handles as ever
-    sets
+    (sets, keys)
   }
+
+  /** Band-key count at or below which [[bandJoinSides]] hints broadcast. */
+  val BroadcastKeyBudget = 4000000L
 
   /** The join-side view of [[bandKeySets]]' frames, the s18
     * pair-budget routing pattern: an SMJ stream-static join
@@ -172,12 +176,10 @@ object DedupIndex {
     * hash map and the stream side never shuffles; past it (the 100 TB
     * corpus-sized index), the shuffle join IS the scale path. The
     * UNHINTED persisted frames stay the unpersist handles (an
-    * unpersist through the hint wrapper misses the cache entry). */
-  def bandJoinSides(spark: SparkSession,
-      sets: IndexedSeq[DataFrame]): IndexedSeq[DataFrame] = {
-    val budget = spark.conf.getOption("graft.st16.broadcastKeyBudget")
-      .map(_.toLong).getOrElse(4000000L)
-    val total = sets.map(_.count()).sum // cached: a cheap cache read
-    if (total <= budget) sets.map(broadcast(_)) else sets
-  }
+    * unpersist through the hint wrapper misses the cache entry).
+    * `keys` is [[bandKeySets]]' total; specs pass `keyBudget` to force
+    * a side. */
+  private[graft] def bandJoinSides(sets: IndexedSeq[DataFrame], keys: Long,
+      keyBudget: Long = BroadcastKeyBudget): IndexedSeq[DataFrame] =
+    if (keys <= keyBudget) sets.map(broadcast(_)) else sets
 }

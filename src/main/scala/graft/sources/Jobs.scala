@@ -149,7 +149,7 @@ object Notifier {
   *   published date → PHYSICAL retention → watermark advance,
   *
   * skipping idempotently when nothing is new. Each stage is one of the
-  * library's verified pieces ([[StateStore.runIncremental]],
+  * library's verified pieces ([[StateStore.freshSince]], [[StateStore.update]],
   * [[Publish.writeDatePartitioned]], [[Publish.dropOldPartitions]]);
   * this class only sequences them, so a scheduler (cron, Airflow, or a
   * Structured Streaming trigger) can call [[runAll]] on any cadence

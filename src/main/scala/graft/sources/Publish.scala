@@ -48,21 +48,4 @@ object Publish {
       dropped.map(_.getName.stripPrefix("date_key=")).toSeq.sorted
     }
   }
-
-  /** The retained slice after [[dropOldPartitions]] — read back for
-    * callers that want the surviving rows. DESTRUCTIVE: physically
-    * deletes the dropped partition directories (since r2; before that
-    * it was a pure filtered read). If retention removed every
-    * partition, returns an empty schemaless-safe frame instead of
-    * letting the empty-directory read throw UNABLE_TO_INFER_SCHEMA. */
-  def cleanupOldData(spark: SparkSession, outDir: String, namespace: String,
-      latestDateKey: String): DataFrame = {
-    dropOldPartitions(spark, outDir, namespace, latestDateKey)
-    val base = new org.apache.hadoop.fs.Path(s"$outDir/$namespace")
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val anyLeft = fs.exists(base) &&
-      fs.listStatus(base).exists(s => s.isDirectory && s.getPath.getName.startsWith("date_key="))
-    if (anyLeft) spark.read.parquet(s"$outDir/$namespace")
-    else spark.emptyDataFrame
-  }
 }

@@ -123,19 +123,6 @@ final class StateStore(spark: SparkSession, path: String) {
       case Some(w) => df.filter(col(tsCol) > lit(w).cast(df.schema(tsCol).dataType))
       case None    => df.filter(col(tsCol).isNotNull)
     }
-
-  /** Incremental-ingest cycle, reference `DataIngest.run` shape: take
-    * rows strictly newer than the stored watermark, and if any were
-    * taken, advance the watermark to their max ts. Returns the new
-    * slice (empty → "No update required. Skipping", as the reference
-    * logs). For pipelines with a downstream publish step, prefer
-    * [[freshSince]] + explicit [[update]] after the publish commits. */
-  def runIncremental(datasetId: String, df: DataFrame, tsCol: String, seq: Long): DataFrame = {
-    val fresh = freshSince(datasetId, df, tsCol)
-    val newMax = fresh.agg(max(col(tsCol)).cast("string")).collect()(0).getString(0)
-    if (newMax != null) update(datasetId, Map("last_update" -> newMax), seq)
-    fresh
-  }
 }
 
 object StateStore {

@@ -1152,7 +1152,7 @@ object Streaming {
       // and counted ONCE before the stream (DedupIndex.bandKeySets) —
       // the unpersisted sides re-scanned and re-shuffled the bands
       // table four times per micro-batch (r9's worst ×10 slot)
-      val bandKeys = graft.sources.DedupIndex.bandKeySets(s, idx)
+      val (bandKeys, nKeys) = graft.sources.DedupIndex.bandKeySets(s, idx)
       // one codegen'd pass over the shingle array for the whole
       // 16-lane signature — byte-identical to the interpreted
       // array_min(transform(md5...)) composition it replaced (the
@@ -1180,7 +1180,7 @@ object Streaming {
         df.withColumn(s"bh$b",
           md5(concat_ws("|", slice(col("sv"), b * 4 + 1, 4))))
       }
-      val joinSides = graft.sources.DedupIndex.bandJoinSides(s, bandKeys)
+      val joinSides = graft.sources.DedupIndex.bandJoinSides(bandKeys, nKeys)
       val joined = (0 until 4).foldLeft(withBands) { (df, b) =>
         df.join(joinSides(b), Seq(s"bh$b"), "left_outer")
       }

@@ -152,16 +152,6 @@ class EdgeCaseSpec extends SparkSpec {
     assert(kept(0).schema.fieldNames.contains("watermark")) // input column survives
   }
 
-  test("cleanupOldData returns an empty frame when retention drops everything") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ret").toString
-    import spark.implicits._
-    val df = Seq((1L, "2020-01-01 00:00:00")).toDF("id", "ts")
-      .select(col("id"), col("ts").cast("timestamp").as("ts"))
-    graft.sources.Publish.writeDatePartitioned(df, dir, "ns", "ts")
-    val out = graft.sources.Publish.cleanupOldData(spark, dir, "ns", "2099-01-01")
-    assert(out.count() == 0)
-  }
-
   test("Md5SeededExpr rejects seed counts outside [1, 64] at construction") {
     import org.apache.spark.sql.graft.ColumnBridge
     val child = ColumnBridge.expression(lit("x"))

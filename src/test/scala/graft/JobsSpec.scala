@@ -420,7 +420,7 @@ class JobsSpec extends SparkSpec {
     val expected = (0 until 4).map(b =>
       DedupIndex.readBands(spark, idxDir)
         .filter(col("band_idx") === b).select("band_hash").distinct().count())
-    val sets = DedupIndex.bandKeySets(spark, idxDir)
+    val (sets, nKeys) = DedupIndex.bandKeySets(spark, idxDir)
     try {
       assert(sets.forall(_.storageLevel.useMemory), "sets must be persisted")
       // delete the backing table: only the cache can answer now
@@ -446,18 +446,17 @@ class JobsSpec extends SparkSpec {
       // is the scale path and the frames come back unhinted
       import spark.implicits._
       val probeDf = Seq("x").toDF("bh0")
-      val small = DedupIndex.bandJoinSides(spark, sets)
+      // the filling pass's counts decide the route
+      assert(nKeys == expected.sum)
+      val small = DedupIndex.bandJoinSides(sets, nKeys)
       val bPlan = probeDf.join(small(0), Seq("bh0"), "left_outer")
         .queryExecution.executedPlan.toString
       assert(bPlan.contains("BroadcastHashJoin"), bPlan)
-      spark.conf.set("graft.st16.broadcastKeyBudget", "0")
-      try {
-        // past the budget the UNHINTED originals come back — the
-        // shuffle-join scale path, and still valid unpersist handles
-        // (auto-broadcast may of course still kick in for small sets;
-        // the route only controls the explicit hint)
-        assert(DedupIndex.bandJoinSides(spark, sets) eq sets)
-      } finally spark.conf.unset("graft.st16.broadcastKeyBudget")
+      // past the budget the UNHINTED originals come back — the
+      // shuffle-join scale path, and still valid unpersist handles
+      // (auto-broadcast may of course still kick in for small sets;
+      // the route only controls the explicit hint)
+      assert(DedupIndex.bandJoinSides(sets, nKeys, keyBudget = 0L) eq sets)
     } finally sets.foreach(_.unpersist())
   }
 

@@ -612,26 +612,17 @@ class RelationalSpec extends SparkSpec {
     // tolerance under a high cap stops after the first 4-round block —
     // both paths must adopt 4 rounds and produce identical frames, and
     // the generated oracle must unroll to exactly the adopted count.
-    def run(): Array[org.apache.spark.sql.Row] =
-      Relational.q36.fn(spark, sf).collect()
-    try {
-      spark.conf.set("graft.q36.roundCap", "4")
-      spark.conf.set("graft.q36.tolMicrosPerNode", "0")
-      val atCap = run()
-      assert(Relational.q36RoundsFor(sf) == 4)
-      spark.conf.set("graft.q36.roundCap", "48")
-      spark.conf.set("graft.q36.tolMicrosPerNode", String.valueOf(Long.MaxValue / (1 << 22)))
-      val early = run()
-      assert(Relational.q36RoundsFor(sf) == 4,
-        s"early stop adopted ${Relational.q36RoundsFor(sf)}")
-      assert(atCap.sameElements(early), "cap run != early-stop run at equal rounds")
-      val oracle = graft.SparkEntry.oracleSqlFor(sf)("q36_pagerank")
-      assert(oracle.contains("r4 AS") && !oracle.contains("r5 AS"),
-        "oracle not unrolled to the adopted round count")
-    } finally {
-      spark.conf.unset("graft.q36.roundCap")
-      spark.conf.unset("graft.q36.tolMicrosPerNode")
-    }
+    def run(roundCap: Int, tolPerNode: Long): Array[org.apache.spark.sql.Row] =
+      Relational.q36Ranks(spark, sf, roundCap, tolPerNode).collect()
+    val atCap = run(4, 0L)
+    assert(Relational.q36RoundsFor(sf) == 4)
+    val early = run(Relational.Q36RoundCap, Long.MaxValue / (1 << 22))
+    assert(Relational.q36RoundsFor(sf) == 4,
+      s"early stop adopted ${Relational.q36RoundsFor(sf)}")
+    assert(atCap.sameElements(early), "cap run != early-stop run at equal rounds")
+    val oracle = graft.SparkEntry.oracleSqlFor(sf)("q36_pagerank")
+    assert(oracle.contains("r4 AS") && !oracle.contains("r5 AS"),
+      "oracle not unrolled to the adopted round count")
   }
 
   test("q34/q40 value grid is domain-bounded (the single-partition window's license)") {
@@ -698,18 +689,22 @@ class RelationalSpec extends SparkSpec {
     // the r18 driver power iteration must reproduce the distributed
     // loop's integer recurrence exactly: same ranks, same degrees, same
     // adopted-rounds count (the dynamic oracle unrolls to that count)
-    def run(): Array[org.apache.spark.sql.Row] =
-      Relational.q36.fn(spark, sf).collect()
-    val viaDriver = run() // corpus edge count is far below the default gate
+    // the driver solve hands back a local relation; the loop does not
+    def onDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.logical.find(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]).isDefined
+    // the corpus edge count is far below the default gate
+    val driverDf = Relational.q36.fn(spark, sf)
+    assert(onDriver(driverDf))
+    val viaDriver = driverDf.collect()
     val roundsDriver = Relational.q36RoundsFor(sf)
-    try {
-      spark.conf.set("graft.q36.driverSolveEdgeCap", "0")
-      val viaCluster = run()
-      assert(Relational.q36RoundsFor(sf) == roundsDriver,
-        s"adopted rounds diverged: $roundsDriver vs ${Relational.q36RoundsFor(sf)}")
-      assert(viaDriver.sameElements(viaCluster),
-        "driver solve != distributed loop")
-    } finally spark.conf.unset("graft.q36.driverSolveEdgeCap")
+    val clusterDf = Relational.q36Ranks(spark, sf, driverCap = 0L)
+    assert(!onDriver(clusterDf), "driverCap 0 must take the distributed loop")
+    val viaCluster = clusterDf.collect()
+    assert(Relational.q36RoundsFor(sf) == roundsDriver,
+      s"adopted rounds diverged: $roundsDriver vs ${Relational.q36RoundsFor(sf)}")
+    assert(viaDriver.sameElements(viaCluster),
+      "driver solve != distributed loop")
   }
 
   test("q36 adopted rounds are keyed by dataset dir — no cross-dir contamination") {
@@ -723,11 +718,9 @@ class RelationalSpec extends SparkSpec {
     Seq((10L, 1L), (11L, 2L)).toDF("l_orderkey", "l_suppkey")
       .write.parquet(s"$dirA/lineitem.parquet")
     try {
-      spark.conf.set("graft.q36.tolMicrosPerNode", "0") // cap always binds
-      spark.conf.set("graft.q36.roundCap", "3")
-      Relational.q36.fn(spark, dirA).collect()
-      spark.conf.set("graft.q36.roundCap", "5")
-      Relational.q36.fn(spark, sf).collect()
+      // tolerance 0: the cap always binds
+      Relational.q36Ranks(spark, dirA, roundCap = 3, tolPerNode = 0L).collect()
+      Relational.q36Ranks(spark, sf, roundCap = 5, tolPerNode = 0L).collect()
       assert(Relational.q36RoundsFor(dirA) == 3 && Relational.q36RoundsFor(sf) == 5)
       val oA = graft.SparkEntry.oracleSqlFor(dirA)("q36_pagerank")
       val oB = graft.SparkEntry.oracleSqlFor(sf)("q36_pagerank")
@@ -737,8 +730,6 @@ class RelationalSpec extends SparkSpec {
       assert(graft.SparkEntry.oracleSqlFor("/nonexistent")("q36_pagerank")
         .contains("r48 AS"))
     } finally {
-      spark.conf.unset("graft.q36.roundCap")
-      spark.conf.unset("graft.q36.tolMicrosPerNode")
       Relational.q36AdoptedRounds.remove(sf) // don't leak cap-5 into later tests
       Relational.q36AdoptedRounds.remove(dirA)
     }

@@ -15,21 +15,23 @@ class SessionBuilderSpec extends AnyFunSuite {
 
   private val allowed = Set("GraftConf.scala", "Sf1Data.scala", "SkewData.scala")
 
-  /** Source files under src/main/scala whose code (comments stripped)
-    * matches `pattern`. */
-  private def sitesOf(pattern: String): Seq[Path] = {
-    val root = Paths.get("src/main/scala")
-    val walk = Files.walk(root)
+  /** Every source file under src/main/scala with its code, comments
+    * stripped. */
+  private lazy val mainCode: Seq[(Path, String)] = {
+    val walk = Files.walk(Paths.get("src/main/scala"))
     try walk.iterator().asScala.toSeq
       .filter(_.toString.endsWith(".scala"))
-      .filter { f =>
-        val code = Files.readString(f)
+      .map { f =>
+        f -> Files.readString(f)
           .replaceAll("(?s)/\\*.*?\\*/", "")
           .replaceAll("//[^\n]*", "")
-        pattern.r.findFirstIn(code).isDefined
       }
     finally walk.close()
   }
+
+  /** Source files whose code matches `pattern`. */
+  private def sitesOf(pattern: String): Seq[Path] =
+    mainCode.collect { case (f, code) if pattern.r.findFirstIn(code).isDefined => f }
 
   test("SparkSession.builder() is called only by GraftConf, Sf1Data and SkewData") {
     val sites = sitesOf("SparkSession\\.builder\\(\\)")
@@ -59,5 +61,28 @@ class SessionBuilderSpec extends AnyFunSuite {
     assert(sites.exists(_.getFileName.toString == "HadoopFs.scala"), sites)
     val stray = sites.filterNot(_.getFileName.toString == "HadoopFs.scala")
     assert(stray.isEmpty, s"use HadoopFs.conf in: ${stray.mkString(", ")}")
+  }
+
+  test("no code under src/main reads a graft session key but the stream provider's") {
+    // a graft-owned key read from the session lets one caller change
+    // another's results on a shared session; size gates are named
+    // constants and call parameters instead. The state-store backend
+    // is a deployment setting, the one key left.
+    val key = "\"(spark\\.)?graft\\.[^\"]*\""
+    // identifiers bound to a graft key literal, e.g. StateStoreProviderConf
+    val named = mainCode.flatMap { case (_, code) =>
+      s"val\\s+(\\w+)\\s*(:\\s*String\\s*)?=\\s*$key".r.findAllMatchIn(code).map(_.group(1))
+    }.toSet
+    val reads = for {
+      (f, code) <- mainCode
+      m <- "(?i)(conf\\s*\\.\\s*(get\\w*|contains)|getConf\\w*)\\s*\\(\\s*([^,)]*)".r
+        .findAllMatchIn(code)
+      arg = m.group(3).trim
+      if arg.matches(key) || named(arg)
+    } yield s"${f.getFileName}: $arg"
+    // the scan sees code: the provider read is found
+    assert(reads.contains("Pipeline.scala: StateStoreProviderConf"), reads)
+    val stray = reads.filterNot(_ == "Pipeline.scala: StateStoreProviderConf")
+    assert(stray.isEmpty, s"graft session keys read in: ${stray.mkString(", ")}")
   }
 }

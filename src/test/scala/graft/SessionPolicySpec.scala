@@ -35,13 +35,17 @@ class SessionPolicySpec extends SparkSpec {
 
   test("q36's distributed loop and t17 on two threads of one session: same results, conf back") {
     val s = spark.newSession()
-    // the corpus is far below q36's driver-solve gate: force the loop
-    s.conf.set("graft.q36.driverSolveEdgeCap", "0")
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
     val start = keys.map(s.conf.get)
-    def q36() = Relational.q36.fn(s, sf).collect().toSeq
+    // the corpus is far below q36's driver-solve gate: force the loop,
+    // which (unlike the driver solve) returns no local relation
+    def q36Frame() = Relational.q36Ranks(s, sf, driverCap = 0L)
+    def q36() = q36Frame().collect().toSeq
     def t17() = TextAnalysis.t17.fn(s, sf).collect().toSeq
-    val (q36Alone, t17Alone) = (q36(), t17())
+    val loop = q36Frame()
+    assert(loop.queryExecution.logical.find(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]).isEmpty)
+    val (q36Alone, t17Alone) = (loop.collect().toSeq, t17())
     val rounds = Relational.q36RoundsFor(sf)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {

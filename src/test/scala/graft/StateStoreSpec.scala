@@ -29,18 +29,25 @@ class StateStoreSpec extends SparkSpec {
     assert(st.watermark("other").contains("1999-01-01"))
   }
 
-  test("runIncremental ingests only new rows and advances the watermark") {
+  test("freshSince + update ingest only new rows and advance the watermark") {
     val st = new StateStore(spark, tmpPath())
     val events = Tables(spark, sf).events
+    // one cycle: take the fresh rows, then move the watermark to their max ts
+    def cycle(df: org.apache.spark.sql.DataFrame, seq: Long) = {
+      val fresh = st.freshSince("ev", df, "ts")
+      val newMax = fresh.agg(max(col("ts")).cast("string")).collect()(0).getString(0)
+      if (newMax != null) st.update("ev", Map("last_update" -> newMax), seq)
+      fresh
+    }
 
     // cycle 1: everything is new
-    val first = st.runIncremental("ev", events, "ts", seq = 1)
+    val first = cycle(events, seq = 1)
     assert(first.count() == events.count())
     val wm1 = st.watermark("ev")
     assert(wm1.isDefined)
 
     // cycle 2 on the same data: nothing new, watermark unchanged
-    val second = st.runIncremental("ev", events, "ts", seq = 2)
+    val second = cycle(events, seq = 2)
     assert(second.count() == 0)
     assert(st.watermark("ev") == wm1)
 
@@ -48,7 +55,7 @@ class StateStoreSpec extends SparkSpec {
     val later = events.limit(1)
       .withColumn("ts", col("ts") + expr("INTERVAL 365 DAYS"))
       .withColumn("event_id", lit(999999L))
-    val third = st.runIncremental("ev", events.unionByName(later), "ts", seq = 3)
+    val third = cycle(events.unionByName(later), seq = 3)
     assert(third.count() == 1)
     assert(st.watermark("ev") != wm1)
   }

@@ -1729,41 +1729,43 @@ class TextDedupSpec extends SparkSpec {
   test("s18 pair-budget gate: brute below, IVF route above, identical surface") {
     // default budget: sf pair space is far below -> brute (the oracled
     // exact path; this is what every correctness surface runs)
+    // the IVF route is the one whose plan assigns corpus cells
+    def run(pairBudget: Long): (Array[org.apache.spark.sql.Row], Boolean) = {
+      val df = Similarity.s18Labels(spark, sf, pairBudget)
+      (df.collect(), df.queryExecution.logical.toString.contains("cell#"))
+    }
     val brute = Similarity.s18.fn(spark, sf).collect()
     assert(brute.nonEmpty)
-    try {
-      // force the scale route on the same data: schema identical, one
-      // prediction per query, votes within k — the surface a caller
-      // sees does not change, only the candidate pruning
-      spark.conf.set("graft.s18.route", "ivf")
-      val ivf = Similarity.s18.fn(spark, sf).collect()
-      assert(ivf.map(_.schema.fieldNames.toSeq).distinct.toSeq ==
-        brute.map(_.schema.fieldNames.toSeq).distinct.toSeq)
-      assert(ivf.map(_.getAs[Long]("query_id")).toSeq ==
-        brute.map(_.getAs[Long]("query_id")).toSeq,
-        "every probe must still get exactly one prediction")
-      ivf.foreach(r => assert(r.getAs[Long]("votes") >= 1 &&
-        r.getAs[Long]("votes") <= 5, r.toString))
-      // pruned candidates: IVF agreement with brute is high but not
-      // required to be total — cells that miss a true neighbor are the
-      // documented trade; on this data the 64-cell codebook over ~490
-      // corpus vectors keeps most neighborhoods intact
-      val bruteBy = brute.map(r =>
-        r.getAs[Long]("query_id") -> r.getAs[Int]("pred_label")).toMap
-      val agree = ivf.count(r =>
-        bruteBy(r.getAs[Long]("query_id")) == r.getAs[Int]("pred_label"))
-      assert(agree * 2 >= ivf.length,
-        s"IVF route lost the plot: $agree/${ivf.length} agree with brute")
-      // the auto gate itself: a tiny budget must pick the IVF route
-      spark.conf.set("graft.s18.route", "auto")
-      spark.conf.set("graft.s18.pairBudget", "1")
-      val routed = Similarity.s18.fn(spark, sf).collect()
-      assert(routed.map(_.getAs[Long]("query_id")).toSeq ==
-        ivf.map(_.getAs[Long]("query_id")).toSeq)
-    } finally {
-      spark.conf.unset("graft.s18.route")
-      spark.conf.unset("graft.s18.pairBudget")
-    }
+    // a pinned brute route gives the same frame as the default gate
+    val (pinned, pinnedIvf) = run(Long.MaxValue)
+    assert(!pinnedIvf && pinned.sameElements(brute))
+    // force the scale route on the same data: schema identical, one
+    // prediction per query, votes within k — the surface a caller
+    // sees does not change, only the candidate pruning
+    val (ivf, forcedIvf) = run(0L)
+    assert(forcedIvf, "pairBudget 0 must take the IVF route")
+    assert(ivf.map(_.schema.fieldNames.toSeq).distinct.toSeq ==
+      brute.map(_.schema.fieldNames.toSeq).distinct.toSeq)
+    assert(ivf.map(_.getAs[Long]("query_id")).toSeq ==
+      brute.map(_.getAs[Long]("query_id")).toSeq,
+      "every probe must still get exactly one prediction")
+    ivf.foreach(r => assert(r.getAs[Long]("votes") >= 1 &&
+      r.getAs[Long]("votes") <= 5, r.toString))
+    // pruned candidates: IVF agreement with brute is high but not
+    // required to be total — cells that miss a true neighbor are the
+    // documented trade; on this data the 64-cell codebook over ~490
+    // corpus vectors keeps most neighborhoods intact
+    val bruteBy = brute.map(r =>
+      r.getAs[Long]("query_id") -> r.getAs[Int]("pred_label")).toMap
+    val agree = ivf.count(r =>
+      bruteBy(r.getAs[Long]("query_id")) == r.getAs[Int]("pred_label"))
+    assert(agree * 2 >= ivf.length,
+      s"IVF route lost the plot: $agree/${ivf.length} agree with brute")
+    // the auto gate itself: a tiny budget must pick the IVF route
+    val (routed, routedIvf) = run(1L)
+    assert(routedIvf)
+    assert(routed.map(_.getAs[Long]("query_id")).toSeq ==
+      ivf.map(_.getAs[Long]("query_id")).toSeq)
   }
 
   test("m10 silence trim: crafted quiet-loud-quiet payload trims both ends") {
